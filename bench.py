@@ -285,8 +285,8 @@ def main() -> None:
     for _ in range(reps):
         pass_total = 0.0
         pass_load_avgs.append(round(os.getloadavg()[0], 1))
-        # Pass-start cache clear (VERDICT r14 #5): every appId-keyed
-        # shared cache is emptied and its blocks released, so each pass
+        # Pass-start cache clear (VERDICT r14 #5): every shared() build
+        # is dropped and its blocks released, so each pass
         # pays each shared build exactly once — the build cost lands in
         # the FIRST timed consumer instead of in no timed number.
         M.free_shared_caches()
@@ -297,6 +297,7 @@ def main() -> None:
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
+            spark.sparkContext.setJobDescription(None)
             # Per-query block release (VERDICT r14 #1/#2): the query's
             # materialize() blocks are dead once its sink returns —
             # without this they accumulate across 152 queries × reps in

@@ -1,5 +1,5 @@
 """Per-query certification-stamp ages from the CORRECTNESS_r*.json
-artifacts — the input every round's DRIVER_PRIORITY window plan needs.
+artifacts — the input to ``registry.all_queries()``'s order.
 
 For each registered query: the latest round a driver row covered it,
 whether that row was green, and which registered queries have never
@@ -8,37 +8,17 @@ been stamped. Run: python scripts/stamp_age.py
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def load_stamps(repo: str) -> dict[str, tuple[int, bool]]:
-    latest: dict[str, tuple[int, bool]] = {}
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        for name, row in json.load(open(f)).items():
-            if not isinstance(row, dict):
-                continue
-            ok = bool(
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match", True)
-                and not row.get("err")
-            )
-            latest[name] = (rnd, ok)
-    return latest
+from yamr_spark.registry import all_queries, load_stamps  # noqa: E402
 
 
 def main() -> None:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    stamps = load_stamps(repo)
-    from yamr_spark.registry import all_queries
-
+    stamps = load_stamps()
     registered = list(all_queries())
     never = [n for n in registered if n not in stamps]
     red = [n for n, (_, ok) in stamps.items() if not ok]

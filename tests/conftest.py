@@ -16,75 +16,6 @@ from yamr_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# ── Fast/slow test tiers (VERDICT r14 #5/#6) ─────────────────────────
-# The full suite runs ~48 min on this host — past the grading driver's
-# window (VERIFY_r14 shows its run truncated at ~45 % with zero
-# failures). Tests whose measured call time was ≥ 8 s in the
-# 2026-08-18 full run (635 passed, 1 skipped, 47:35) are tiered into
-# the `slow` marker, deselected by default via pytest.ini addopts;
-# `pytest -m slow tests/` runs the tier (kept green — it is a subset
-# of the same full run, and the round gates re-run it). Node ids are
-# matched exactly; a renamed test silently drops OUT of the slow tier
-# (fails safe: the default tier only ever gains coverage).
-_SLOW_NODEIDS = {
-    "tests/test_driver_contract.py::test_no_registered_query_emits_unhashable_columns",
-    "tests/test_properties.py::test_cosine_contract_null_or_bounded",
-    "tests/test_plans.py::test_headline_single_partition_windows_are_audited",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[pagerank_near_dup]",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[simhash]",
-    "tests/test_properties.py::test_exact_global_rank_is_sorted_position",
-    "tests/test_properties.py::test_cms_never_underestimates_any_multiset",
-    "tests/test_properties.py::test_heavy_hitters_exact_for_any_corpus_and_k",
-    "tests/test_properties.py::test_salted_sum_equals_plain_sum",
-    "tests/test_properties.py::test_compat_shim_matches_native_wordcount",
-    "tests/test_properties.py::test_token_budget_pack_prefix_law",
-    "tests/test_properties.py::test_substring_dedup_matches_bruteforce",
-    "tests/test_round9_queries.py::test_weighted_per_group_consistent_with_global",
-    "tests/test_similarity.py::test_pca_top_component_recovers_dominant_axis",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[simhash_near_dup]",
-    "tests/test_properties.py::test_sum_per_key_partition_invariance",
-    "tests/test_properties.py::test_range_join_matches_naive",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[pca_top_component]",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[simhash_estimate_quality]",
-    "tests/test_properties.py::test_minimized_dedup_matches_model",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[pca_top_components]",
-    "tests/test_multimodal.py::test_frame_sampling",
-    "tests/test_streaming.py::test_streaming_minimized_index_matches_batch_replay",
-    "tests/test_properties.py::test_asof_join_matches_naive",
-    "tests/test_analytics.py::test_approx_aggregates_error_bounds",
-    "tests/test_similarity.py::test_ivf_shared_cache_matches_uncached",
-    "tests/test_curation.py::test_flagged_cache_matches_uncached",
-    "tests/test_properties.py::test_chunking_matches_naive",
-    "tests/test_streaming.py::test_streaming_substring_incremental_and_restart",
-    "tests/test_streaming.py::test_streaming_substring_index_compaction",
-    "tests/test_properties.py::test_containment_stratified_full_span_recall",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[semdedup]",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[sparse_cosine_pairs]",
-    "tests/test_similarity.py::test_multi_probe_superset_and_boundary_recovery",
-    "tests/test_round9_queries.py::test_span_dup_no_forced_hints_partial_agg",
-    "tests/test_analytics.py::test_skyline_2d_quantization_contract",
-    "tests/test_similarity.py::test_multi_probe_superset_real_embeddings",
-    "tests/test_round9_queries.py::test_bloom_semi_join_hints_only_bounded_bucket_set",
-    "tests/test_substring_dedup.py::test_minimized_outlier_doc_guard",
-    "tests/test_properties.py::test_global_shuffle_is_permutation",
-    "tests/test_round9_queries.py::test_pca_components_decreasing_unit_norm",
-    "tests/test_round9_queries.py::test_pca_components_first_equals_single",
-    "tests/test_round9_queries.py::test_llm_prep_v4_budget_and_monotonicity",
-    "tests/test_similarity.py::test_kmeans_ivf_recall_at_k",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[sparse_cosine_linkage_pairs]",
-    "tests/test_similarity.py::test_zero_norm_vectors_never_crash_or_outrank",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[llm_prep_pipeline_v4]",
-    "tests/test_multimodal.py::test_image_ahash_near_dup_goldens",
-    "tests/test_registry_oracle.py::test_query_matches_oracle[srp_estimate_quality]",
-    "tests/test_streaming.py::test_streaming_lsh_compaction_preserves_flags",
-}
-
-
-def pytest_collection_modifyitems(config, items):
-    for item in items:
-        if item.nodeid in _SLOW_NODEIDS:
-            item.add_marker(pytest.mark.slow)
-
 
 @pytest.fixture(scope="session")
 def spark():

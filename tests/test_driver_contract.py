@@ -47,13 +47,16 @@ def test_every_oracle_has_query_and_no_empty_sql():
 
 
 def test_driver_priority_names_resolve(spark):
-    """Every DRIVER_PRIORITY entry (the certification-window plan) must
-    name a registered query — a typo here silently burns a driver
-    window slot — and the 50-slot window must be duplicate-free."""
-    from yamr_spark.registry import DRIVER_PRIORITY, all_queries
+    """``queries()`` lists every registered name exactly once, in the
+    certification order: never-stamped first, then oldest
+    ``CORRECTNESS_r*.json`` stamp first, registration order breaking
+    ties."""
+    from yamr_spark.registry import QUERIES, load_stamps
 
-    qs = all_queries()
-    missing = [n for n in DRIVER_PRIORITY if n not in qs]
-    assert not missing, missing
-    window = DRIVER_PRIORITY[:50]
-    assert len(set(window)) == 50, "window has duplicates"
+    names = list(all_queries())
+    assert sorted(names) == sorted(QUERIES) and len(set(names)) == len(names)
+    rounds = {n: r for n, (r, _) in load_stamps().items()}
+    registered = list(QUERIES)
+    keys = [(rounds.get(n, 0), registered.index(n)) for n in names]
+    assert keys == sorted(keys)
+    assert list(all_oracles()) == [n for n in names if n in all_oracles()]

@@ -2,14 +2,29 @@
 produce identical results on the operators that materialize
 intermediates, and each must truncate/replace the subplan so consumers
 never recompute it.
+
+Block lifetimes and shared builds: every local-mode checkpoint's
+internal RDD id is tracked (pinned inside a ``shared()`` build,
+freeable otherwise); ``free_blocks()`` drops the per-query blocks and
+``free_shared_caches()`` clears the shared registry and its blocks.
 """
 
 from __future__ import annotations
+
+import ast
+import contextlib
+import glob
+import os
+import sys
+import threading
+import time
 
 import pytest
 
 from yamr_spark import materialize as M
 from yamr_spark.plans import plan_text
+from yamr_spark.registry import all_queries
+from yamr_spark.tables import table
 
 
 @pytest.fixture(autouse=True)
@@ -96,3 +111,218 @@ def test_mode_selection_env(monkeypatch):
     assert M.current_mode() == "parquet"
     with pytest.raises(ValueError):
         M.set_mode("nope")
+
+
+def _n_persistent(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def _run(spark, sf_dir, name):
+    all_queries()[name](spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+
+
+def test_free_blocks_releases_per_query_frames(spark, sf_dir):
+    M.free_blocks()
+    M.free_shared_caches()
+    base = _n_persistent(spark)
+    df = M.materialize(table(spark, sf_dir, "documents").select("doc_id"))
+    df.write.format("noop").mode("overwrite").save()
+    assert _n_persistent(spark) == base + 1
+    assert M.free_blocks() >= 1
+    assert _n_persistent(spark) == base
+
+
+def test_pinned_blocks_survive_free_blocks(spark, sf_dir):
+    M.free_blocks()
+    M.free_shared_caches()
+    base = _n_persistent(spark)
+    with M.pinned_blocks():
+        pinned = M.materialize(
+            table(spark, sf_dir, "documents").select("doc_id")
+        )
+    pinned.write.format("noop").mode("overwrite").save()
+    M.free_blocks()
+    assert _n_persistent(spark) == base + 1
+    # the pinned frame is still usable after a per-query flush
+    assert pinned.count() > 0
+    M.free_shared_caches()
+    assert _n_persistent(spark) == base
+
+
+def test_free_inside_pinned_scope_raises():
+    """Freeing while a shared build is open would drop frames the build
+    has already materialized (unrecomputable once unpersisted)."""
+    with M.pinned_blocks():
+        with pytest.raises(RuntimeError):
+            M.free_blocks()
+        with pytest.raises(RuntimeError):
+            M.free_shared_caches()
+
+
+def test_free_blocks_concurrent_with_materialize_frees_each_id_once(spark):
+    """Worker threads (e.g. streaming foreachBatch) materialize while the
+    main thread frees: every tracked id is freed exactly once — the
+    returned counts add up to the number of materialize() calls — and
+    none is left persisted."""
+    M.free_blocks()
+    src = spark.range(10)
+    n_threads, per_thread = 6, 25
+    ids: list[int] = []
+
+    def work():
+        for _ in range(per_thread):
+            out = M.materialize(src)
+            ids.append(out._jdf.queryExecution().analyzed().rdd().id())
+
+    threads = [threading.Thread(target=work) for _ in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        freed = 0
+        deadline = time.monotonic() + 120
+        while any(t.is_alive() for t in threads) and time.monotonic() < deadline:
+            freed += M.free_blocks()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    freed += M.free_blocks()
+    assert freed == n_threads * per_thread == len(set(ids))
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert not persisted & set(ids)
+
+
+def test_shared_builds_once_per_key_and_evicts_other_apps(spark):
+    M.free_shared_caches()
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    first = M.shared(spark, "t", (1,), build)
+    assert M.shared(spark, "t", (1,), build) is first and len(calls) == 1
+    assert M.shared(spark, "t", (2,), build) is not first and len(calls) == 2
+    M._SHARED[("dead-app", "t", (1,))] = object()
+    M.shared(spark, "t", (3,), build)
+    assert not any(k[0] == "dead-app" for k in M._SHARED)
+    M.free_shared_caches()
+    assert M.shared(spark, "t", (1,), build) is not first and len(calls) == 4
+    M.free_shared_caches()
+
+
+def test_shared_resolves_registry_hooks_at_call_time(spark, monkeypatch):
+    """Profilers count shared builds and hits by swapping
+    ``register_shared_cache`` and ``pinned_blocks`` on the module:
+    ``shared()`` must register its dict on first use, read with
+    ``.get()``, store by item assignment and build inside the pin."""
+    seen = []
+
+    class Counting(dict):
+        def get(self, key, default=None):
+            seen.append("get")
+            return dict.get(self, key, default)
+
+        def __setitem__(self, key, value):
+            seen.append("set")
+            dict.__setitem__(self, key, value)
+
+    register, pinned = M.register_shared_cache, M.pinned_blocks
+
+    @contextlib.contextmanager
+    def traced_pinned():
+        seen.append("pin")
+        with pinned():
+            yield
+
+    monkeypatch.setattr(M, "_SHARED", None)
+    monkeypatch.setattr(M, "_SHARED_CACHES", [])
+    monkeypatch.setattr(M, "register_shared_cache", lambda c: register(Counting(c)))
+    monkeypatch.setattr(M, "pinned_blocks", traced_pinned)
+    assert M.shared(spark, "t", (), lambda: 1) == 1
+    assert M.shared(spark, "t", (), lambda: 2) == 1
+    assert seen == ["get", "pin", "set", "get"]
+
+
+def test_query_modules_share_builds_only_through_shared():
+    """No query module keeps its own appId-keyed frame cache or pins
+    blocks itself. ``_WINNOW_BUCKET_CACHE`` is the one exception: it
+    holds a catalog table name that must survive per-pass clears."""
+    pkg = os.path.dirname(M.__file__)
+    bad = []
+    for path in sorted(glob.glob(os.path.join(pkg, "queries_*.py"))):
+        mod = os.path.basename(path)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        module_dicts = set()
+        for node in tree.body:
+            if isinstance(node, ast.Assign | ast.AnnAssign):
+                value = node.value
+                is_dict = isinstance(value, ast.Dict) or (
+                    isinstance(value, ast.Call)
+                    and getattr(value.func, "id", None)
+                    in ("dict", "register_shared_cache")
+                )
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                if is_dict:
+                    module_dicts |= {t.id for t in targets if isinstance(t, ast.Name)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name in ("register_shared_cache", "pinned_blocks"):
+                    bad.append(f"{mod}:{node.lineno} calls {name}")
+            if isinstance(node, ast.FunctionDef) and any(
+                isinstance(n, ast.Attribute) and n.attr == "applicationId"
+                for n in ast.walk(node)
+            ):
+                used = {
+                    n.id for n in ast.walk(node)
+                    if isinstance(n, ast.Name) and n.id in module_dicts
+                }
+                bad += [
+                    f"{mod}:{node.name} keys {d} by applicationId"
+                    for d in sorted(used - {"_WINNOW_BUCKET_CACHE"})
+                ]
+    assert not bad, bad
+
+
+def test_shared_cache_clear_forces_rebuild_with_identical_values(
+    spark, sf_dir
+):
+    """Consumers of two different shared builds (containment shingles +
+    probe hits; IVF centroids + assignment) must produce bit-identical
+    rows before and after ``free_shared_caches()`` (the bench clears at
+    every pass start — VERDICT r14 #5)."""
+    for name in ("containment_pairs_bidir", "ann_ivf_topk"):
+        q = all_queries()[name]
+        a = sorted(map(tuple, q(spark, sf_dir).collect()))
+        M.free_blocks()
+        M.free_shared_caches()
+        b = sorted(map(tuple, q(spark, sf_dir).collect()))
+        M.free_blocks()
+        assert a == b and len(a) > 0, name
+
+
+def test_stale_ids_are_harmless(spark):
+    """Freeing is id-based (no JVM handles pinned): ids of long-gone
+    RDDs must no-op rather than raise."""
+    M._FREEABLE.append((spark.sparkContext, 10_000_000))
+    assert M.free_blocks() == 1
+
+
+def test_bench_queries_run_clean_after_full_flush(spark, sf_dir):
+    """End-to-end: run a shared-cache consumer, flush everything, run a
+    different consumer of the SAME cache — the rebuild path must not
+    reference freed blocks."""
+    _run(spark, sf_dir, "containment_pairs_stratified")
+    M.free_blocks()
+    M.free_shared_caches()
+    _run(spark, sf_dir, "containment_pairs_bidir")
+    M.free_blocks()
+    M.free_shared_caches()

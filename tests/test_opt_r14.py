@@ -225,12 +225,3 @@ def test_containment_probe_hits_shared_values_identical(spark, sf_dir):
             map(tuple, op(docs, sh=sh, rare=rare, probe_hits=hits).collect())
         )
         assert base == shared, op.__name__
-
-
-def test_containment_probe_hits_hatch_restores_baseline(spark, sf_dir, monkeypatch):
-    """YAMR_OPT_CPH=0 must return None so the operators rebuild
-    internally — the exact pre-batch-7 plan."""
-    from yamr_spark.queries_dedup import _containment_probe_hits_shared
-
-    monkeypatch.setenv("YAMR_OPT_CPH", "0")
-    assert _containment_probe_hits_shared(spark, sf_dir) is None

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from yamr_spark.streaming.events import (
@@ -82,7 +81,6 @@ def test_session_gap_splits(spark):
     ]
 
 
-@pytest.mark.slow
 def test_stream_matches_batch(spark, sf_dir):
     batch = tumbling_event_counts(table(spark, sf_dir, "events"), "1 hour")
     sdf = streaming_tumbling_counts(spark, sf_dir, width="1 hour", delay="2 hours")

@@ -10,16 +10,16 @@ consumer recomputes the subplan. Three strategies, selected per-session:
 - ``local`` (default on local[n]): ``localCheckpoint(eager=False)`` —
   executor-memory/local-disk blocks, zero serialization to external
   storage. Fastest, but blocks vanish on executor loss; the right
-  default for the single-JVM test/bench harness only. LAZY, and that
-  is safe AND faster: Spark truncates the LOGICAL plan immediately
-  (the returned frame is a LogicalRDD even before computation — so
-  iterative loops stay plan-bounded exactly as with eager), while
-  the actual computation fuses into the first consuming job instead
-  of launching a separate blocking job per intermediate. Measured on
-  the dedup headline family: 31.5 s eager → 29.6 s lazy (min-of-2,
-  sf0.1), every query moving the same direction. Multiple consumers
-  still compute it once — localCheckpoint caches MEMORY_AND_DISK on
-  first touch.
+  default for the single-JVM test/bench harness only. Spark truncates
+  the LOGICAL plan immediately (the returned frame is a LogicalRDD
+  before any computation), so iterative loops stay plan-bounded, and
+  multiple consumers compute the input once — localCheckpoint caches
+  MEMORY_AND_DISK on first touch. Lazy only for inputs WITHOUT an
+  exchange: under AQE (on in ``session.get_spark`` and by default in
+  Spark 4) an input with a shuffle has its shuffle stages run as a job
+  at once, so the call is a blocking barrier on the driver thread
+  (measured at 4 cores: 1 job per call with AQE on, 0 with it off).
+  Only the final stage fuses into the first consuming job.
 - ``disk``: reliable ``checkpoint(eager=True)`` into the Spark
   checkpoint dir (YAMR_SPARK_CHECKPOINT_DIR on a cluster — a DFS path —
   else a per-process temp dir). Truncates lineage like ``local`` but
@@ -48,66 +48,66 @@ import contextlib
 import os
 import threading
 import uuid
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame
 
 from yamr_spark.tmpdirs import session_dir
 
+T = TypeVar("T")
+
 _MODES = ("local", "disk", "parquet")
 _mode_override: str | None = None
 
-# ── Block-lifetime registry (VERDICT r14 #1/#2) ──────────────────────
+# ── Block lifetimes and shared builds ─────────────────────────────────
 # Every ``local``-mode materialize() persists MEMORY_AND_DISK blocks
-# that outlive the query that built them: the bench runs 152 queries ×
-# 3 passes in ONE application, and without explicit cleanup the blocks
-# accumulate for the whole process (the JVM ContextCleaner only frees
-# them when the driver GCs the RDD reference, which a 32 GiB heap may
-# defer for the entire run). The registry below records the INTERNAL
-# checkpointed RDD handle of every frame materialize() returns, in two
-# buckets:
+# that the JVM ContextCleaner frees only when the driver GCs the RDD
+# reference, which a large heap may defer for a whole bench run. So
+# every checkpointed frame's internal RDD id is tracked:
 #
-# - freeable (default): per-query intermediates — dead the moment the
-#   query's action completes. ``free_blocks()`` unpersists them; the
-#   bench calls it after every query's sink returns.
-# - pinned (inside a ``pinned_blocks()`` scope): frames stashed in the
-#   module-level appId-keyed shared caches, which later queries WILL
-#   consume — unpersisting a localCheckpointed frame makes it
-#   unrecomputable (lineage is truncated), so these are only released
-#   by ``free_shared_caches()``, which also clears the cache dicts so
-#   no consumer can see a freed frame. The bench calls it at the start
-#   of every pass, so min-of-passes prices each shared build exactly
-#   once per pass (VERDICT r14 #5).
+# - freeable (default): per-query intermediates, dead once the query's
+#   action completes. ``free_blocks()`` unpersists them between queries.
+# - pinned (inside ``pinned_blocks()``): frames built by ``shared()``,
+#   which later queries consume. Unpersisting a localCheckpointed frame
+#   makes it unrecomputable, so these are released only by
+#   ``free_shared_caches()``, which first empties the shared registry so
+#   no consumer can see a freed frame.
 #
-# Tracking stores the internal RDD's integer id, NOT a py4j handle: a
-# held handle would pin the JVM RDD object and silently disable the
-# ContextCleaner for callers that never flush (the driver's own
-# correctness loop), while ids are context-unique and never reused, so
-# freeing a long-gone id is a harmless no-op. The id comes off the
-# LogicalRDD plan (one py4j chain — NOT ``df.rdd``, which converts the
-# plan to an RDD at ~110 ms of driver work per call); release goes
-# through ``SparkContext.unpersistRDD(id)``, the exact call the
-# ContextCleaner itself uses. Tracking is best-effort: on any JVM-side
-# surprise the frame stays untracked and the ContextCleaner handles it
-# as before.
+# ``shared(spark, name, params, build)`` is the one way a query module
+# reuses a build across queries. Contract:
+# - the key is ``(applicationId, name, params)``; ``params`` must hold
+#   every input that changes the build (sf_dir and operator params);
+# - a miss evicts other applications' keys (a new session gets a new
+#   appId, so they can never be hit again), then runs ``build()``
+#   inside ``pinned_blocks()`` and stores its result;
+# - ``build()`` runs outside the lock: two threads missing the same key
+#   at once both build, and the first stored value is returned to both.
+#
+# Ids, not py4j handles, are tracked: a held handle would pin the JVM
+# RDD and disable the ContextCleaner for callers that never free, while
+# ids are never reused, so freeing a long-gone id is a no-op. One lock
+# guards the registry and both id lists; the lists are drained by
+# swapping in a fresh list, so an id tracked by another thread during a
+# drain lands in the next drain instead of being lost.
 _TL = threading.local()
+_LOCK = threading.Lock()
 _FREEABLE: list[tuple] = []  # (SparkContext, rdd_id)
 _PINNED_RDDS: list[tuple] = []
 _SHARED_CACHES: list[dict] = []
+_SHARED: dict | None = None
 
 
 def register_shared_cache(cache: dict) -> dict:
-    """Register a module-level appId-keyed frame cache so
-    ``free_shared_caches()`` can clear it (and release its blocks)."""
+    """Register a frame cache so ``free_shared_caches()`` clears it."""
     _SHARED_CACHES.append(cache)
     return cache
 
 
 @contextlib.contextmanager
 def pinned_blocks():
-    """Scope marker for shared-cache builders: frames materialized
-    inside survive ``free_blocks()`` and are released only by
-    ``free_shared_caches()`` (which also clears the cache dicts, so a
-    freed frame is unreachable). Thread-local, so a streaming
+    """Scope marker for shared builds: frames materialized inside
+    survive ``free_blocks()``. Thread-local, so a streaming
     foreachBatch thread cannot mis-pin a concurrent query's frames."""
     depth = getattr(_TL, "pin_depth", 0)
     _TL.pin_depth = depth + 1
@@ -117,45 +117,83 @@ def pinned_blocks():
         _TL.pin_depth = depth
 
 
+def shared(spark, name: str, params: tuple, build: Callable[[], T]) -> T:
+    """``build()``'s result, built once per (application, name, params)
+    and reused by every later call until ``free_shared_caches()``."""
+    global _SHARED
+    app = spark.sparkContext.applicationId
+    key = (app, name, params)
+    with _LOCK:
+        if _SHARED is None:
+            _SHARED = register_shared_cache({})
+        cache = _SHARED
+        hit = cache.get(key)
+        if hit is not None:
+            return hit
+        for stale in [k for k in cache if k[0] != app]:
+            del cache[stale]
+    with pinned_blocks():
+        value = build()
+    with _LOCK:
+        if key not in cache:
+            cache[key] = value
+        return cache[key]
+
+
 def _track(out: DataFrame) -> None:
     try:
         rdd_id = out._jdf.queryExecution().analyzed().rdd().id()
         sc = out.sparkSession.sparkContext
     except Exception:
         return
-    if getattr(_TL, "pin_depth", 0) > 0:
-        _PINNED_RDDS.append((sc, rdd_id))
-    else:
-        _FREEABLE.append((sc, rdd_id))
+    with _LOCK:
+        pinned = getattr(_TL, "pin_depth", 0) > 0
+        (_PINNED_RDDS if pinned else _FREEABLE).append((sc, rdd_id))
 
 
 def _unpersist_ids(entries: list[tuple]) -> int:
-    n = len(entries)
     for sc, rdd_id in entries:
         try:
             sc._jsc.sc().unpersistRDD(rdd_id, False)
         except Exception:
             pass
-    entries.clear()
-    return n
+    return len(entries)
+
+
+def _refuse_in_pinned_scope(fn: str) -> None:
+    if getattr(_TL, "pin_depth", 0) > 0:
+        raise RuntimeError(
+            f"{fn}() inside pinned_blocks(): the shared build in progress "
+            "would lose frames it has already materialized"
+        )
 
 
 def free_blocks() -> int:
     """Unpersist every per-query materialized frame created since the
     last call (non-blocking). Safe ONLY when those frames are dead —
     i.e. between queries; a localCheckpointed frame cannot be used
-    after its blocks are dropped. Returns the number of RDDs freed."""
-    return _unpersist_ids(_FREEABLE)
+    after its blocks are dropped. Raises inside ``pinned_blocks()``.
+    Returns the number of RDDs freed."""
+    global _FREEABLE
+    _refuse_in_pinned_scope("free_blocks")
+    with _LOCK:
+        entries, _FREEABLE = _FREEABLE, []
+    return _unpersist_ids(entries)
 
 
 def free_shared_caches() -> int:
     """Clear every registered shared cache and unpersist the pinned
-    frames they held. Consumers rebuild on next use (the dicts are
-    cleared FIRST, so no stale frame is reachable). Returns the number
-    of RDDs freed."""
-    for cache in _SHARED_CACHES:
-        cache.clear()
-    return _unpersist_ids(_PINNED_RDDS)
+    frames they held. Consumers rebuild on next use (the caches are
+    cleared FIRST, so no stale frame is reachable). Call between
+    queries, with no shared build in flight. Returns the number of RDDs
+    freed."""
+    global _PINNED_RDDS
+    _refuse_in_pinned_scope("free_shared_caches")
+    with _LOCK:
+        for cache in _SHARED_CACHES:
+            cache.clear()
+        entries, _PINNED_RDDS = _PINNED_RDDS, []
+    return _unpersist_ids(entries)
 
 
 def set_mode(mode: str | None) -> None:

@@ -1112,15 +1112,7 @@ def dedup_ladder(docs: DataFrame, width: int = 8) -> DataFrame:
     # every rung and the funnel report — left lazy the tokenize subtree
     # re-executes per consumer (~6× in this plan); spread first so the
     # one tokenize pass parallelizes (guide §2.5).
-    import os as _os
-
-    base = (docs.select("doc_id", "text")).select(
-        "doc_id", "text", n_tok.alias("n_tok")
-    )
-    # YAMR_OPT_MAT_LADDER=0: A/B hatch (VERDICT r14 #7) — drop the base
-    # barrier so the tokenize subtree replays per consumer (the r13 plan)
-    if _os.environ.get("YAMR_OPT_MAT_LADDER", "1") == "1":
-        base = materialize(base)
+    base = materialize(docs.select("doc_id", "text", n_tok.alias("n_tok")))
 
     # keep-lists are MATERIALIZED (id-only frames): s1 is referenced by
     # norm_keep, s2 and the funnel report — each reference re-runs the

@@ -1671,16 +1671,7 @@ def sparse_cosine_pairs(
     # posting side) and norms two — without barriers each replays the
     # whole TF-IDF pass (tokenize, tf, df, window top-n). vec is
     # top_n rows/doc (~tens of B/doc), the scale-safe unit.
-    import os as _os
-
-    # YAMR_OPT_MAT_SPVEC=0: A/B hatch (VERDICT r14 #7) — drop the
-    # vec/norms barriers so each consumer replays the TF-IDF pass
-    _mat = (
-        materialize
-        if _os.environ.get("YAMR_OPT_MAT_SPVEC", "1") == "1"
-        else (lambda df: df)
-    )
-    vec = _mat(
+    vec = materialize(
         tfidf_top_terms(docs, top_n=top_n, max_df_frac=max_df_frac).select(
             "doc_id", "token", F.col("tfidf").alias("w")
         )
@@ -1688,7 +1679,7 @@ def sparse_cosine_pairs(
     dec = lambda c: F.sum(
         F.expr(f"cast(round({c}, 9) as decimal(28,9))")
     )
-    norms = _mat(
+    norms = materialize(
         vec.groupBy("doc_id").agg(
             F.sqrt(dec("w * w").cast("double")).alias("nrm")
         )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from yamr_spark.materialize import materialize, shared
 from yamr_spark.operators import curation as C
 from yamr_spark.queries_dedup import _TOKS_CTE
 from yamr_spark.registry import register
@@ -43,33 +44,20 @@ sh AS (
 """
 )
 
-# Shared decontamination flag-set for the pipeline family (same
-# session-cache pattern as the shingle/IVF/frame-signature caches):
-# llm_prep_pipeline v1/v2/v3 each anti-join the SAME 5-gram-overlap
-# flag set; compute it once per (application, sf_dir, bench_mod).
-# ``benchmark_decontaminate`` itself stays the UNCACHED representative
-# so the stage's own cost remains measured.
-from yamr_spark.materialize import pinned_blocks, register_shared_cache
-
-_FLAGGED_CACHE: dict[tuple[str, str, int], object] = register_shared_cache({})
-
 
 def _flagged_shared(spark, sf_dir, bench_mod=97):
-    key = (spark.sparkContext.applicationId, sf_dir, bench_mod)
-    flagged = _FLAGGED_CACHE.get(key)
-    if flagged is None:
-        from yamr_spark.materialize import materialize
-
-        for stale in [k for k in _FLAGGED_CACHE if k[0] != key[0]]:
-            del _FLAGGED_CACHE[stale]
-        with pinned_blocks():
-            flagged = materialize(
-                C.benchmark_decontaminate(
-                    table(spark, sf_dir, "documents"), bench_mod=bench_mod
-                ).select("doc_id")
-            )
-        _FLAGGED_CACHE[key] = flagged
-    return flagged
+    """Decontamination flag-set shared by llm_prep_pipeline v1/v2/v3,
+    which each anti-join the SAME 5-gram-overlap flags.
+    ``benchmark_decontaminate`` itself stays the UNCACHED representative
+    so the stage's own cost remains measured."""
+    return shared(
+        spark, "flagged", (sf_dir, bench_mod),
+        lambda: materialize(
+            C.benchmark_decontaminate(
+                table(spark, sf_dir, "documents"), bench_mod=bench_mod
+            ).select("doc_id")
+        ),
+    )
 
 
 _HEX = "0123456789abcdef"

@@ -7,8 +7,11 @@ so the driver's value-hash compares real content, not just row counts.
 
 from __future__ import annotations
 
+import inspect as _inspect
+
 from pyspark.sql import DataFrame, functions as F
 
+from yamr_spark.materialize import materialize, shared
 from yamr_spark.operators import dedup as D
 from yamr_spark.operators.graph import connected_components
 from yamr_spark.registry import register
@@ -17,57 +20,22 @@ from yamr_spark.tables import table
 # One verified MinHash near-dup pair table per (session, sf_dir),
 # shared by the graph-analytics family (VERDICT r06 #5): dedup_groups /
 # dedup_keep_best / pagerank_near_dup / neardup_triangles all consume
-# the SAME pair set, and each used to re-run the whole LSH pipeline
-# (~4 s each at sf0.1, ~12 s of the 37 s dedup family). This is the
-# production pattern made explicit — compute the pair table once,
-# run every graph analysis over it. minhash_near_dup itself stays
-# UNCACHED so the pipeline's own cost remains measured; the cache
-# holds a materialize()d frame (lineage-truncated: local checkpoint on
-# local[n], parquet staging at cluster scale), so consumers share the
-# computed blocks, not a plan.
-from yamr_spark.materialize import pinned_blocks, register_shared_cache
-
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = register_shared_cache({})
+# the SAME pair set; compute it once, run every graph analysis over it.
+# minhash_near_dup itself stays UNCACHED so the pipeline's own cost
+# remains measured.
 
 
 def _near_dup_pairs_shared(spark, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PAIR_CACHE.get(key)
-    if df is None:
-        from yamr_spark.materialize import materialize
+    return shared(
+        spark, "near_dup_pairs", (sf_dir,),
+        lambda: materialize(D.minhash_near_dup(table(spark, sf_dir, "documents"))),
+    )
 
-        # entries keyed by DEAD applications can never be reused (a new
-        # session gets a new appId) — evict them so a long-lived process
-        # cycling SparkSessions doesn't pin one materialized frame per
-        # (app, sf_dir) forever (review r07 finding)
-        for stale in [k for k in _PAIR_CACHE if k[0] != key[0]]:
-            del _PAIR_CACHE[stale]
-        with pinned_blocks():
-            df = materialize(
-                D.minhash_near_dup(table(spark, sf_dir, "documents"))
-            )
-        _PAIR_CACHE[key] = df
-    return df
-
-
-# One hashed-shingle table + rare (df <= max_df) stream per
-# (session, sf_dir, n, max_df), shared by the containment family
-# (stratified + bidir) — same discipline as the pair table above: both
-# queries open with the identical tokenize → shingle → md5 → distinct
-# build and its document-frequency filter (~the first half of each
-# query's cost at sf0.1); compute it once, run both probe/verify
-# pipelines over the shared materialized frames. Values are identical
-# by construction (the operators take the frames as optional inputs).
-_SHINGLE_CACHE: dict[
-    tuple[str, str, int, int], tuple[DataFrame, DataFrame]
-] = register_shared_cache({})
 
 # The containment helpers' parameter defaults are DERIVED from the
 # operator signature (ADVICE r14 #2): a future change to the operator's
 # n/max_df/probes_per_doc defaults must not silently feed consumers a
 # probe-hit table built with stale parameters.
-import inspect as _inspect
-
 _CONT_SIG = {
     name: p.default
     for name, p in _inspect.signature(
@@ -82,40 +50,22 @@ def _containment_shingles_shared(
     n: int = _CONT_SIG["n"],
     max_df: int = _CONT_SIG["max_df"],
 ) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir, n, max_df)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is None:
-        from yamr_spark.materialize import materialize
+    """(sh, rare): the hashed-shingle table and its df <= max_df stream,
+    shared by the containment family (stratified + bidir + ngram
+    Jaccard), which all open with the same tokenize → shingle → md5 →
+    distinct build and document-frequency filter."""
 
-        for stale in [k for k in _SHINGLE_CACHE if k[0] != key[0]]:
-            del _SHINGLE_CACHE[stale]
-        with pinned_blocks():
-            sh = materialize(
-                D.word_shingle_hashes(table(spark, sf_dir, "documents"), n=n)
-            )
-            dfreq = sh.groupBy("sh").agg(F.count("*").alias("df"))
-            rare = materialize(
-                sh.join(dfreq.where(F.col("df") <= max_df).select("sh"), "sh")
-            )
-        hit = (sh, rare)
-        _SHINGLE_CACHE[key] = hit
-    return hit
+    def build():
+        sh = materialize(
+            D.word_shingle_hashes(table(spark, sf_dir, "documents"), n=n)
+        )
+        dfreq = sh.groupBy("sh").agg(F.count("*").alias("df"))
+        rare = materialize(
+            sh.join(dfreq.where(F.col("df") <= max_df).select("sh"), "sh")
+        )
+        return sh, rare
 
-
-# One raw directed probe-hit table per (session, sf_dir, n, max_df,
-# probes_per_doc) — the sharing discipline one level up the same
-# family: the stratified (directed) and bidir forms both open with the
-# IDENTICAL bottom-k-per-doc window over the shared rare stream plus
-# the probe⋈rare inverted-index join; only the canonicalization of the
-# hits differs (src→dst distinct vs least/greatest distinct). Compute
-# the raw hits once; each query applies its own canonicalization and
-# its own exact verify. Values identical by construction (the
-# operators take the frame as an optional input and the cache feeds
-# exactly what they would build). YAMR_OPT_CPH=0 (read in the query
-# registrations) restores the per-query rebuild for A/B runs.
-_PROBE_HITS_CACHE: dict[
-    tuple[str, str, int, int, int], DataFrame
-] = register_shared_cache({})
+    return shared(spark, "containment_shingles", (sf_dir, n, max_df), build)
 
 
 def _containment_probe_hits_shared(
@@ -124,30 +74,22 @@ def _containment_probe_hits_shared(
     n: int = _CONT_SIG["n"],
     max_df: int = _CONT_SIG["max_df"],
     probes: int = _CONT_SIG["probes_per_doc"],
-) -> DataFrame | None:
-    import os as _os
+) -> DataFrame:
+    """The raw directed probe hits (bottom-k-per-doc window over the
+    shared rare stream ⋈ rare) that stratified and bidir both open
+    with; each applies its own canonicalization and exact verify."""
 
-    if _os.environ.get("YAMR_OPT_CPH", "1") != "1":
-        return None  # operator rebuilds internally — exact baseline
-    _, rare = _containment_shingles_shared(spark, sf_dir, n=n, max_df=max_df)
-    key = (spark.sparkContext.applicationId, sf_dir, n, max_df, probes)
-    hit = _PROBE_HITS_CACHE.get(key)
-    if hit is None:
-        from yamr_spark.materialize import materialize
+    def build():
+        _, rare = _containment_shingles_shared(spark, sf_dir, n=n, max_df=max_df)
+        # project to src/dst BEFORE materializing (ADVICE r14 #1): both
+        # canonicalizations consume only these two columns
+        return materialize(
+            D._containment_probe_candidates(rare, probes).select("src", "dst")
+        )
 
-        for stale in [k for k in _PROBE_HITS_CACHE if k[0] != key[0]]:
-            del _PROBE_HITS_CACHE[stale]
-        with pinned_blocks():
-            # project to src/dst BEFORE materializing (ADVICE r14 #1):
-            # both canonicalizations consume only these two columns, so
-            # the cached blocks should not carry the join-key `sh`
-            hit = materialize(
-                D._containment_probe_candidates(rare, probes).select(
-                    "src", "dst"
-                )
-            )
-        _PROBE_HITS_CACHE[key] = hit
-    return hit
+    return shared(
+        spark, "containment_probe_hits", (sf_dir, n, max_df, probes), build
+    )
 
 
 # Shared DuckDB CTEs: tokens and distinct word-3-shingles per document.

@@ -10,8 +10,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from yamr_spark.materialize import materialize, shared
 from yamr_spark.operators.multimodal import (
     decode_image_stats,
+    frame_signatures,
     resize_thumbnail,
     sample_frames,
     with_binary_payload,
@@ -24,36 +26,18 @@ def _payload(spark, sf_dir):
     return with_binary_payload(table(spark, sf_dir, "documents"))
 
 
-# Shared frame-signature table for the acoustic/video dedup family
-# (same session-cache pattern as the containment shingle cache and the
-# IVF centroid cache): the three consumers — audio fingerprint, audio
-# shift, video shift — share ONE ASCII-gated corpus scan + symbol build
-# per (application, sf_dir, frame, n_frames, qstep). Stale-application
-# keys are evicted so dead sessions never pin frames.
-from yamr_spark.materialize import pinned_blocks, register_shared_cache
-
-_SIGS_CACHE: dict[tuple[str, str, int, int, int], object] = register_shared_cache(
-    {}
-)
-
-
 def _sigs_shared(spark, sf_dir, frame=32, n_frames=8, qstep=4096):
-    key = (spark.sparkContext.applicationId, sf_dir, frame, n_frames, qstep)
-    sigs = _SIGS_CACHE.get(key)
-    if sigs is None:
-        from yamr_spark.materialize import materialize
-        from yamr_spark.operators.multimodal import frame_signatures
-
-        for stale in [k for k in _SIGS_CACHE if k[0] != key[0]]:
-            del _SIGS_CACHE[stale]
-        with pinned_blocks():
-            sigs = materialize(
-                frame_signatures(
-                    table(spark, sf_dir, "documents"), frame, n_frames, qstep
-                )
+    """Frame-signature table shared by the acoustic/video dedup family
+    (audio fingerprint, audio shift, video shift): ONE ASCII-gated
+    corpus scan + symbol build per parameter set."""
+    return shared(
+        spark, "frame_sigs", (sf_dir, frame, n_frames, qstep),
+        lambda: materialize(
+            frame_signatures(
+                table(spark, sf_dir, "documents"), frame, n_frames, qstep
             )
-        _SIGS_CACHE[key] = sigs
-    return sigs
+        ),
+    )
 
 
 @register(

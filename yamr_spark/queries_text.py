@@ -4,10 +4,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from yamr_spark.materialize import materialize, shared
 from yamr_spark.operators import text as T
 from yamr_spark.operators.text import BPE_REGEX, LANG_PROFILES
 from yamr_spark.registry import register
-from yamr_spark.tables import table
+from yamr_spark.tables import spread_scan, table
 
 _TOKS = (
     "list_filter(regexp_split_to_array(lower(text), '[^\\p{L}\\p{N}_]+'), "
@@ -115,47 +116,23 @@ def q_doc_fingerprint(spark, sf_dir):
     return T.doc_fingerprint(table(spark, sf_dir, "documents"))
 
 
-# One materialized winnowing-fingerprint frame per (session, sf_dir),
-# shared by the winnow family (stats / near-dup / llm_prep_pipeline_v5)
-# — the same discipline as queries_dedup._PAIR_CACHE: the build (one
-# char-gram window pass over the corpus) is computed once per session
-# and every consumer reads the materialized blocks. Values are
-# identical by construction (winnow_near_dup takes the frame as an
-# optional input).
-from yamr_spark.materialize import pinned_blocks, register_shared_cache
-
-_WINNOW_FP_CACHE: dict = register_shared_cache({})
-
-
 def _winnow_fps_shared(spark, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _WINNOW_FP_CACHE.get(key)
-    if df is None:
-        from yamr_spark.materialize import materialize
-
-        for stale in [k for k in _WINNOW_FP_CACHE if k[0] != key[0]]:
-            del _WINNOW_FP_CACHE[stale]
-        from yamr_spark.tables import spread_scan
-
-        # The build is the per-char md5 gram kernel — the same regime
-        # as the substring char roots (spread kept there at −2.8 to
-        # −4.3 s each). Under r14's never-cleared cache the build ran
-        # once per process and the A/B only saw cache-hit consumers;
-        # with the r15 per-pass clearing the build is timed every pass,
-        # so its root is spread like the rest of the char family.
-        with pinned_blocks():
-            df = materialize(
-                T.winnowing_fingerprints(
-                    spread_scan(
-                        table(spark, sf_dir, "documents").select(
-                            "doc_id", "text"
-                        ),
-                        cost_factor=8192,
-                    )
+    """Winnowing-fingerprint frame shared by the winnow family (stats /
+    near-dup / llm_prep_pipeline_v5); winnow_near_dup takes it as an
+    optional input, so values are identical by construction. The build
+    is the per-char md5 gram kernel, so its root is scan-spread like
+    the rest of the char family."""
+    return shared(
+        spark, "winnow_fps", (sf_dir,),
+        lambda: materialize(
+            T.winnowing_fingerprints(
+                spread_scan(
+                    table(spark, sf_dir, "documents").select("doc_id", "text"),
+                    cost_factor=8192,
                 )
             )
-        _WINNOW_FP_CACHE[key] = df
-    return df
+        ),
+    )
 
 
 # NOT a frame cache (holds a catalog table NAME): the bucketed

@@ -13,6 +13,8 @@ Use ``@register("name", oracle="SELECT ...")`` to add entries;
 from __future__ import annotations
 
 import functools
+import glob
+import json
 import os
 import tempfile
 import zipfile
@@ -100,573 +102,36 @@ def _load_query_modules() -> None:
 
 
 _LOADED = False
-
-# The driver's CORRECTNESS gate checks the FIRST 50 entries of
-# queries() per round. This window (planned for r8; r8 ended before
-# the driver ran, so it executes at the END OF ROUND 9) is the r07
-# verdict's plan with the round-9 amendment described below:
-# (1) quality_stratified_sample first — its r07 hash flake is fixed
-# (decimal-disciplined means) and a changed plan must earn a fresh
-# stamp; (2) the 7 queries registered late in r07 that have never met
-# the driver; (3) pca_top_components + streaming_kmv_distinct —
-# planned in r08's registry comments but BUILT in round 9, never
-# stamped; (4) the r02/r03 stale-stamp tail minus the two displaced
-# green-r03 entries; (5) containment_pairs_bidir (r08's one new
-# registration) in the last slot. 1 + 7 + 2 + 39 + 1 = 50 exactly.
-#
-# Stamps NOT refreshed this round, and why that is sound:
-# - unigram_lm_score / bigram_lm_score (r07 green): their mean is now
-#   decimal-disciplined, but the VALUES are unchanged — old-vs-new
-#   compared in DuckDB at sf0.01: 0 differing rows — so the r07 stamps
-#   still certify the exact outputs these queries produce; the change
-#   only removes partition-layout nondeterminism. Locally re-verified
-#   ALL-MATCH (drive.py) this round.
-# - streaming_upsert_latest / embedding_covariance_gemm (r07 green):
-#   ADVICE hygiene fixes (per-write overwrite mode; assert → raise)
-#   with identical semantics; locally re-verified ALL-MATCH.
-DRIVER_PRIORITY = [
-    "quality_stratified_sample",
-]
-
-# The 7 + 41 the r07 verdict sequenced for this window (#2 there).
-# Round-9 amendment (round 8 ended before the driver ran this window,
-# so it executes now): the two queries registered in r08 with no stamp
-# at all — pca_top_components, streaming_kmv_distinct — take the slots
-# of two stale-but-GREEN r03 stamps (max_value_per_year,
-# json_props_stats; both unchanged since their green run and both
-# pinned by unit tests). Never-certified is a strictly worse state
-# than stale-certified, so never-stamped queries outrank stale
-# restamps for window slots. The two displaced queries head
-# _R10_BACKFILL below.
-_R08_BACKFILL = [
-    "hashed_doc_embeddings",
-    "weighted_sample_docs",
-    "hybrid_rrf_search",
-    "token_budget_pack",
-    "cms_user_frequency",
-    "mmr_diverse_topk",
-    "streaming_cms_frequency",
-    "pca_top_components",
-    "streaming_kmv_distinct",
-    "corpus_curation",
-    "dedup_exact",
-    "tfidf_top_terms",
-    "asof_click_purchase",
-    "benchmark_decontaminate",
-    "embedding_near_dup_p2",
-    "grouping_sets_pricing",
-    "hash_split_counts",
-    "ivf_probe_partitioned",
-    "jsonl_corrupt_handling",
-    "jsonl_roundtrip_stats",
-    "llm_prep_pipeline",
-    "math_price_features",
-    "multimodal_frame_counts",
-    "multimodal_large_assets",
-    "multimodal_meta",
-    "ngram_novelty",
-    "null_handling_props",
-    "order_value_buckets",
-    "orders_per_month",
-    "part_name_search",
-    "pii_scrub_stats",
-    "pivot_user_event_counts",
-    "quota_sample_lang",
-    "range_click_near_purchase",
-    "repetition_stats",
-    "salted_value_sum",
-    "split_store_train_counts",
-    "sql_revenue_by_segment",
-    "streaming_click_purchase_join",
-    "streaming_dedup_events",
-    "streaming_enrich_dim",
-    "streaming_parquet_sink",
-    "streaming_tumbling_counts",
-    "streaming_user_stats",
-    "value_percentiles",
-    "window_session_user",
-    "window_sliding_activity",
-    "window_tumbling_counts",
-    # slot 50: the round's one new driver-gated query (verdict #3) —
-    # the only new registration allowed to take a headroom slot.
-    "containment_pairs_bidir",
-]
-
-# Certification debt beyond the 50-slot window, ordered for the r10
-# window: first the two green-r03 queries displaced by the never-stamped
-# pair, then queries registered in round 9 (new operators acquire debt,
-# never displace backfill), then r07-stamped queries whose later hygiene
-# changes were locally re-verified ALL-MATCH (values unchanged — their
-# r07 stamps still certify the outputs), oldest-stamp-first after that.
-_R10_BACKFILL = [
-    "max_value_per_year",
-    "json_props_stats",
-    # round-9 registrations (exact oracles + tests; debt until stamped):
-    "span_dup_stats",
-    "leakage_safe_split",
-    "heavy_hitter_terms",
-    "bloom_semi_join_orders",
-    "weighted_sample_per_lang",
-    "llm_prep_pipeline_v4",
-    "multimodal_ahash_near_dup",
-    "multimodal_audio_fingerprint_dedup",
-    "multimodal_video_shift_dedup",
-    # plan-change restamp (r9: shared containment shingle cache — the
-    # family's shingle build computed once per session; values verified
-    # identical via drive.py ALL-MATCH, but a changed plan must earn a
-    # fresh stamp; containment_pairs_bidir is in THIS round's window so
-    # it gets stamped on the new plan directly):
-    "containment_pairs_stratified",
-    # plan-change restamps (r9: shared IVF centroid/assignment cache —
-    # VERDICT r07 #4 — and the entity-resolution materialize barrier,
-    # r07 #7; all locally re-verified ALL-MATCH via drive.py at sf0.01
-    # under local/disk/parquet materialize modes, and pinned equal to
-    # their uncached forms by tests/test_similarity.py;
-    # ivf_probe_partitioned is in THIS round's window so it gets
-    # stamped on the new shared-cache plan directly):
-    "ann_ivf_topk",
-    "ann_ivf_kmeans_topk",
-    "ann_quantized_ivf_topk",
-    "hard_negative_mining_ivf",
-    "entity_resolution_parts",
-    # plan-change restamp (r9: ngram_jaccard_pairs joins the shared
-    # containment shingle cache — same n=3/df≤50 build; drive.py
-    # ALL-MATCH, cached==uncached pinned by tests/test_dedup.py):
-    "ngram_jaccard_pairs",
-    # hygiene-change restamps (locally ALL-MATCH, r07 stamps valid):
-    "unigram_lm_score",
-    "bigram_lm_score",
-    "streaming_upsert_latest",
-    "embedding_covariance_gemm",
-]
-# ROUND-10 WINDOW (the driver checks the first 50 of queries()):
-# exactly the r09 verdict's #3 plan. Slot 1: quality_stratified_sample
-# — driver-red twice (r07, r09); its float-interpolated quantile edges
-# are now replaced by rank-based integer quartiles (verdict #1), a
-# changed plan AND a red stamp, so it leads the window. Slots 2-23:
-# _R10_BACKFILL verbatim (2 displaced green-r03s, 9 never-stamped
-# round-9 registrations, 11 plan/hygiene-change restamps). Slot 24:
-# quality_stratified_sample_approx — this round's one new registration
-# (verdict #7), never-stamped so it outranks stale restamps but queues
-# BEHIND the planned backfill per the debt rule. Slots 25-50: 26 of
-# the 35 remaining r04 stamps (the two r04 entries already in the
-# backfill — ann_ivf_kmeans_topk, ngram_jaccard_pairs — don't repeat),
-# alphabetical. The 9 r04 leftovers + the 37 r05 stamps head
-# _R11_BACKFILL, oldest-first.
-_R04_RESTAMPS = [
-    "benchmark_decontaminate_n3",
-    "bm25_search",
-    "chunk_documents",
-    "chunk_dup_stats",
-    "corpus_version_diff",
-    "date_features",
-    "dedup_incremental",
-    "discounted_brand_revenue",
-    "excess_supply_suppliers",
-    "fuzzy_part_pairs",
-    "global_shuffle_stats",
-    "important_part_value",
-    "kmv_distinct_orders",
-    "large_volume_customers",
-    "llm_prep_pipeline_v2",
-    "minhash_near_dup",
-    "modality_interleave",
-    "multimodal_decode_stats",
-    "nation_trade_volume",
-    "observed_gate_metrics",
-    "pack_sequences",
-    "promo_revenue_share",
-    "rich_idle_customers",
-    "salted_dim_join",
-    "small_qty_part_revenue",
-]
-
-# r04 stamps that did not fit this window + every r05 stamp — the
-# ordered head of next round's window (oldest-stamp-first after these).
-# Plan-change restamps first (r10: llm_prep_pipeline v1/v3 joined the
-# shared decontamination flag-set cache — values pinned equal to the
-# uncached forms by tests/test_curation.py and locally re-verified
-# ALL-MATCH under strict drive.py; v2 is stamped on the new plan in
-# THIS round's window; the three multimodal dedup queries likewise get
-# their first stamps on the shared frame-signature-cache plan directly):
-_R11_BACKFILL = [
-    "llm_prep_pipeline",
-    "llm_prep_pipeline_v3",
-    # new r10 registrations beyond the two verdict-ordered window slots
-    # (TPC-H Q4 analogue completing all 22 shapes; the direct
-    # distributed-rank certification); never-stamped, so they head the
-    # stale restamps below:
-    "order_priority_check",
-    "global_rank_documents",
-    "ann_pq_adc_topk",
-    "snapshot_time_travel",
-    "sql_view_pipeline",
-    "streaming_event_passthrough",
-    "streaming_session_windows",
-    "supplier_attr_counts",
-    "synthetic_source_stats",
-    "top_supplier_revenue",
-    "variant_props_stats",
-    "waiting_suppliers",
-    "window_rank_family",
-]
-
-# The 33 oldest remaining stale stamps (all r05; equal age →
-# alphabetical), filling the r11 window after the backfill head and
-# the two verdict-ordered new registrations.
-_R05_RESTAMPS = [
-    "bpe_encode_stats",
-    "bpe_learn_merges",
-    "bpe_learn_merges_batched",
-    "cohort_retention",
-    "compacted_store_counts",
-    "compat_word_count",
-    "compat_year_max_region",
-    "constraint_check_report",
-    "csv_roundtrip_stats",
-    "cust_order_distribution",
-    "ewma_user_value",
-    "export_manifest",
-    "funnel_stages",
-    "incremental_agg_refresh",
-    "lang_id_eval",
-    "late_shipment_priority",
-    "market_share",
-    "min_cost_supplier",
-    "minhash_near_dup_parquet_staged",
-    "moving_stats_per_user",
-    "nation_profit",
-    "orc_roundtrip_stats",
-    "pricing_summary",
-    "revenue_per_nation",
-    "schema_evolution_stats",
-    "shipping_priority",
-    "simhash",
-    "simhash_near_dup",
-    "sorted_store_stats",
-    "stats_moments",
-    "string_features",
-    "table_profile",
-    "temperature_mixture_sample",
-]
-
-# The r12 window head: this round's post-window registrations
-# (never-stamped outranks stale restamps; registered AFTER the r11
-# window was sequenced, so they queue here rather than displacing the
-# verdict-ordered plan) — the 4 late ANN-family entries, then the 11
-# r11-continuation registrations in build order — then the 4 r05
-# stamps that did not fit the r11 window (then the r06 tail,
-# oldest-stamp-first, as usual).
-_R12_BACKFILL = [
-    "ann_ivf_pq_kmeans_topk",
-    "ivf_pq_store_probe",
-    "ann_ivfadc_residual_topk",
-    "ivf_pq_store_incremental",
-    # r11-continuation registrations (never-stamped, in build order):
-    # estimator-quality certification for the MinHash family, full MOSS
-    # winnowing, CCNet tertile gating on the distributed rank, and the
-    # DoReMi-lite epoch allocator
-    "minhash_estimate_quality",
-    "winnow_fingerprint_stats",
-    "winnow_near_dup",
-    "lm_quality_buckets",
-    "domain_epoch_allocation",
-    "llm_prep_pipeline_v5",
-    "normalization_dedup_stats",
-    "simhash_estimate_quality",
-    "kmv_estimate_error",
-    "winnow_incremental",
-    "srp_estimate_quality",
-    "try_function_features",
-    "value_histogram",
-    "word_count",
-    "zorder_store_stats",
-]
-
-# The r06-stamp cohort (38 queries whose latest driver stamp is r06),
-# alphabetical: the first 31 fill the r12 window behind _R12_BACKFILL;
-# the 7-entry tail heads the r13 queue.
-_R06_RESTAMPS = [
-    "ann_brute_topk",
-    "ann_quantized_topk",
-    "approx_aggregates",
-    "audio_frame_energy",
-    "basket_type_lift",
-    "containment_pairs",
-    "daily_resample_ffill",
-    "daily_value_median_trend",
-    "domain_mix_sample",
-    "embedding_covariance",
-    "embedding_near_dup",
-    "embedding_quantize_stats",
-    "equidepth_histogram",
-    "event_zscore_anomalies",
-    "gopher_quality_filters",
-    "hard_negative_mining",
-    "incremental_join_view_refresh",
-    "ivf_assign",
-    "key_skew_report",
-    "kmeans_centroids",
-    "mad_outlier_report",
-    "multimodal_frame_sample",
-    "multimodal_thumbnails",
-    "ngram_repetition_profile",
-    "phrase_search_table_table",
-    "pii_redaction_stats",
-    "quality_drift_psi",
-    "quality_percentile_gate",
-    "recency_weighted_user_score",
-    "repeat_purchase_interval",
-    "revenue_mom_growth",
-]
-_R06_TAIL = [
-    "scd2_customer_history",
-    "semdedup",
-    "srp_near_dup",
-    "streaming_windowed_topk",
-    "supplier_ship_latency",
-    "top_event_paths",
-    "vocab_coverage",
-]
-
-# Queries registered during round 12 itself (build order): never-stamped,
-# so they head the post-window queue per the debt rule — they take r13
-# window slots before any stale restamp.
-_R13_BACKFILL: list[str] = [
-    "substring_dedup_spans",
-    "substring_dedup_docs",
-    "ivf_pq_store_frozen",
-    "compat_year_max_refpart",
-    "dedup_ladder",
-    "substring_dedup_incremental",
-    "streaming_substring_index",
-    "substring_dedup_chars",
-]
-
-# The r07-stamp cohort is now the oldest (43 queries; the r06 cohort
-# shrinks to the 7-entry tail after the r12 window restamped 31 + the
-# earlier windows the rest). The alphabetically-first 35 fill the r13
-# window behind the backfill + tail; the 8-entry remainder heads the
-# r14 stale queue.
-_R07_RESTAMPS = [
-    "active_custkeys_intersect",
-    "cdc_latest_state",
-    "click_purchase_full",
-    "combine_per_key",
-    "cube_pricing",
-    "customers_with_orders",
-    "customers_without_orders",
-    "dedup_groups",
-    "dedup_keep_best",
-    "dedup_lineitem_rows",
-    "distinct_parts_per_flag",
-    "doc_fingerprint",
-    "embedding_norms",
-    "forecast_revenue",
-    "inactive_custkeys_except",
-    "kmv_distinct_users_per_type",
-    "kmv_set_ops_customers",
-    "kv_json_render",
-    "lang_id",
-    "max_per_key",
-    "minhash_band_pairs",
-    "minhash_signatures",
-    "neardup_triangles",
-    "order_gap_days",
-    "order_priority_counts",
-    "orders_above_avg",
-    "pagerank_near_dup",
-    "pareto_skyline_parts",
-    "pca_top_component",
-    "quality_score",
-    "range_frame_revenue",
-    "rank_customers_in_nation",
-    "returned_revenue_by_customer",
-    "rollup_pricing",
-]
-_R07_TAIL = [
-    "sparse_cosine_linkage_pairs",
-    "sparse_cosine_pairs",
-    "streaming_lsh_incremental",
-    "sum_per_key",
-    "supplier_nation_volume",
-    "token_stats",
-    "top_orders",
-    "top_words",
-    "union_mapper_outputs",
-]
-
-# Queries registered during round 13 itself (build order): never-stamped,
-# so they head the post-window queue per the debt rule — they take r14
-# window slots before any stale restamp.
-_R14_BACKFILL: list[str] = [
-    "substring_dedup_minimized",
-    "substring_dedup_minimized_incremental",
-    "streaming_minimized_index",
-]
-
-# The r09-stamp cohort (48 queries) is the oldest after the r14 window
-# retires the 9-query _R07_TAIL. The alphabetically-first 36 fill the
-# r14 window behind the backfill + changed-plan restamps + tail; the
-# 12-entry remainder (streaming_kmv_distinct .. window_tumbling_counts)
-# heads the r15 stale queue and should open the r15 window after
-# _R15_BACKFILL.
-_R09_RESTAMPS = [
-    "asof_click_purchase",
-    "benchmark_decontaminate",
-    "cms_user_frequency",
-    "containment_pairs_bidir",
-    "corpus_curation",
-    "dedup_exact",
-    "embedding_near_dup_p2",
-    "grouping_sets_pricing",
-    "hash_split_counts",
-    "hashed_doc_embeddings",
-    "hybrid_rrf_search",
-    "ivf_probe_partitioned",
-    "jsonl_corrupt_handling",
-    "jsonl_roundtrip_stats",
-    "math_price_features",
-    "mmr_diverse_topk",
-    "multimodal_frame_counts",
-    "multimodal_large_assets",
-    "multimodal_meta",
-    "ngram_novelty",
-    "null_handling_props",
-    "order_value_buckets",
-    "orders_per_month",
-    "part_name_search",
-    "pca_top_components",
-    "pii_scrub_stats",
-    "pivot_user_event_counts",
-    "quota_sample_lang",
-    "range_click_near_purchase",
-    "repetition_stats",
-    "salted_value_sum",
-    "split_store_train_counts",
-    "sql_revenue_by_segment",
-    "streaming_click_purchase_join",
-    "streaming_cms_frequency",
-    "streaming_dedup_events",
-]
-
-# Queries registered during round 14 itself (build order): never-stamped,
-# so they head the post-window queue per the debt rule — they take r15
-# window slots before any stale restamp.
-_R15_BACKFILL: list[str] = [
-    "ivf_pq_store_frozen_m16",
-    "substring_dedup_minimized_chunked",
-]
-
-# Round-15 changed-plan restamps: this optimization round changed these
-# queries' physical plans (values verified bit-identical by the full
-# 261-query oracle replica), and a changed plan must earn a fresh stamp
-# (the standing discipline since r09). Grouped by the change, most
-# structural first: persisted frozen store params (the probe now reads
-# trained params from parquet instead of rebuilding them), broadcast
-# hints in the power-iteration joins, the spread winnow-fingerprint
-# build root, the src/dst-projected shared containment probe hits, and
-# the data-sized spread_scan targets (at the driver's sf0.01 the spread
-# width drops from 32 manufactured partitions to a data-derived 4-12).
-_R15_RESTAMPS = [
-    "ivf_pq_store_frozen",
-    "ann_recall_at_k",
-    "pca_top_component",
-    "pca_top_components",
-    "winnow_near_dup",
-    "winnow_fingerprint_stats",
-    "winnow_incremental",
-    "llm_prep_pipeline_v5",
-    "containment_pairs_stratified",
-    "containment_pairs_bidir",
-    "substring_dedup_chars",
-    "substring_dedup_minimized",
-    "substring_dedup_minimized_incremental",
-    "streaming_minimized_index",
-    "substring_dedup_spans",
-    "span_dup_stats",
-    "llm_prep_pipeline_v4",
-    "chunk_documents",
-    "pii_redaction_stats",
-    "quality_score",
-    "semdedup",
-    "embedding_near_dup_p2",
-    "fuzzy_part_pairs",
-    "entity_resolution_parts",
-    "compat_word_count",
-]
-
-# The r09-stamp cohort remainder (stamp_age.py, computed at r15 start:
-# exactly these 12 queries' latest stamp is r09) — the oldest stale
-# cohort, promised the r15 window head by the r14 sequencing note.
-_R09_TAIL = [
-    "streaming_enrich_dim",
-    "streaming_kmv_distinct",
-    "streaming_parquet_sink",
-    "streaming_tumbling_counts",
-    "streaming_user_stats",
-    "tfidf_top_terms",
-    "token_budget_pack",
-    "value_percentiles",
-    "weighted_sample_docs",
-    "window_session_user",
-    "window_sliding_activity",
-    "window_tumbling_counts",
-]
-
-# ROUND-15 WINDOW (the driver checks the first 50 of queries()):
-# slots 1-2: _R15_BACKFILL — the two round-14 registrations, never
-# stamped. Slots 3-27: _R15_RESTAMPS — every query whose plan this
-# round's optimization changed (values replica-verified identical; the
-# restamp certifies the plan that now ships). Slots 28-39: _R09_TAIL —
-# the 12 remaining r09 stamps, the oldest cohort (extinct after this
-# window). Slots 40-50: the 11 alphabetically-first r10 stamps not
-# already in the window (ann_ivf_kmeans_topk .. dedup_incremental).
-# 2 + 25 + 12 + 11 = 50.
-_R10_COHORT_HEAD = [
-    "ann_ivf_kmeans_topk",
-    "ann_ivf_topk",
-    "ann_quantized_ivf_topk",
-    "benchmark_decontaminate_n3",
-    "bigram_lm_score",
-    "bloom_semi_join_orders",
-    "bm25_search",
-    "chunk_dup_stats",
-    "corpus_version_diff",
-    "date_features",
-    "dedup_incremental",
-]
-
-DRIVER_PRIORITY = _R15_BACKFILL + _R15_RESTAMPS + _R09_TAIL + _R10_COHORT_HEAD
-
-# The retired r14 window, kept for the queue tail ordering below.
-_R14_WINDOW = (
-    _R14_BACKFILL
-    + ["ann_recall_at_k", "streaming_substring_index"]
-    + _R07_TAIL
-    + _R09_RESTAMPS
-)
-for _n in (
-    _R14_WINDOW
-    + _R13_BACKFILL
-    + _R06_TAIL
-    + _R07_RESTAMPS
-    + _R12_BACKFILL
-    + _R11_BACKFILL
-    + ["ann_ivf_pq_topk", "ann_recall_at_k"]
-    + _R05_RESTAMPS
-    + _R10_BACKFILL
-    + _R04_RESTAMPS
-    + _R08_BACKFILL
-    + _R06_RESTAMPS
-):
-    if _n not in DRIVER_PRIORITY:
-        DRIVER_PRIORITY.append(_n)
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _prioritized(d: dict) -> dict:
-    head = {n: d[n] for n in DRIVER_PRIORITY if n in d}
-    return head | {n: v for n, v in d.items() if n not in head}
+def load_stamps(repo: str = _REPO) -> dict[str, tuple[int, bool]]:
+    """{query: (latest round whose ``CORRECTNESS_r*.json`` has a row for
+    it, whether that row was green)} — the driver's certification stamps."""
+    latest: dict[str, tuple[int, bool]] = {}
+    files = glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
+    for rnd, f in sorted((int(f.rsplit("_r", 1)[1].split(".")[0]), f) for f in files):
+        with open(f) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            if isinstance(row, dict):
+                ok = row.get("rows_match") and row.get("schema_match")
+                ok = ok and row.get("hash_match", True) and not row.get("err")
+                latest[name] = (rnd, bool(ok))
+    return latest
+
+
+@functools.cache
+def _stamp_rounds() -> dict[str, int]:
+    return {name: rnd for name, (rnd, _) in load_stamps().items()}
+
+
+def _certification_order(d: dict) -> dict:
+    """The driver certifies the first entries of ``queries()``, so order
+    them never-stamped first, then oldest stamp first. Registration order
+    breaks ties, and is the whole order when no stamp files exist."""
+    rounds = _stamp_rounds()
+    return {n: d[n] for n in sorted(d, key=lambda n: rounds.get(n, 0))}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -674,9 +139,9 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     if not _LOADED:
         _load_query_modules()
         _LOADED = True
-    return _prioritized(QUERIES)
+    return _certification_order(QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
     all_queries()
-    return _prioritized(ORACLES)
+    return _certification_order(ORACLES)
