@@ -54,6 +54,15 @@ class RegionStatsReducer:
         return [("distinct_keys", len({k for k, _ in pairs}))]
 
 
+class PartitionIdMapper:
+    """Emits (id of the map task's partition, 1) once per input row."""
+
+    def run_map(self, data):
+        from pyspark import TaskContext
+
+        return [(str(TaskContext.get().partitionId()), 1)]
+
+
 @pytest.mark.parametrize("mode", ["grouped", "region"])
 def test_word_count_job(spark, mode):
     df = spark.createDataFrame([("aa yy jj aa",), ("  aa cc.   yy jj,   aa",)], ["text"])
@@ -236,3 +245,16 @@ def test_partitioner_choice_same_answer(spark, partitioner):
         partitioner=partitioner,
     )
     assert dict(got.collect()) == {"aa": 4, "yy": 2, "jj": 2, "cc": 1}
+
+
+def test_single_partition_in_memory_input_maps_wide(spark):
+    """An input with no files behind it (no scan to size the map width
+    from) still fans out: a one-partition in-memory frame maps on more
+    than one partition, not serially on one core."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("needs defaultParallelism >= 2")
+    df = spark.createDataFrame([(f"row {i}",) for i in range(64)], ["text"]).coalesce(1)
+    assert df.rdd.getNumPartitions() == 1
+    got = dict(run_job(spark, df, PartitionIdMapper(), SumReducer()).collect())
+    assert sum(got.values()) == 64
+    assert len(got) > 1, got

@@ -134,3 +134,66 @@ def test_read_missing_snapshot_raises(spark, tmp_path):
         read_snapshot(spark, table, 99)
     with pytest.raises(ValueError):
         read_snapshot(spark, table, 0)  # empty snapshot
+
+
+def test_commit_jobs_do_not_grow_with_touched_buckets(spark, tmp_path, job_count):
+    """A commit touching one bucket runs as many Spark jobs as a commit
+    touching all eight: one partitioned write stages every touched
+    bucket."""
+    from pyspark.sql import functions as F
+
+    from yamr_spark.streaming.upsert import _bucket_of
+
+    rows = spark.range(64).select(
+        F.col("id").alias("k"), _bucket_of(F.col("id"), 8).alias("b")
+    ).collect()
+    every = [r.k for r in rows]
+    one = [r.k for r in rows if r.b == rows[0].b]
+    assert len({r.b for r in rows}) == 8 and len(one) > 1
+
+    def batch(keys, day):
+        return _batch(spark, [(k, day * 1000 + k, 1.0, datetime(2024, 1, day)) for k in keys])
+
+    table = str(tmp_path / "t")
+    create_table(table)
+    keys = dict(key="user_id", order="ts", tie="event_id")
+    commit_merge(batch(every, 1), table, **keys)
+    b_one, b_all = batch(one, 2), batch(every, 3)
+    n_one = job_count(lambda: commit_merge(b_one, table, **keys))
+    n_all = job_count(lambda: commit_merge(b_all, table, **keys))
+    assert n_one == n_all, (n_one, n_all)
+    assert {r.event_id for r in read_snapshot(spark, table).collect()} == {
+        3000 + k for k in every
+    }
+
+
+def test_staging_residue_invisible_swept_and_expiry_safe(spark, tmp_path):
+    """A staging dir left by a crashed commit is invisible to
+    ``read_snapshot``, leaves ``expire_snapshots`` working, and is
+    swept by the next commit."""
+    import shutil
+
+    from yamr_spark.streaming.upsert import _STAGING
+
+    table = str(tmp_path / "t")
+    create_table(table)
+    keys = dict(key="user_id", order="ts", tie="event_id")
+    rows = [(u, 10 + u, 1.0, datetime(2024, 1, 1)) for u in range(6)]
+    commit_merge(_batch(spark, rows), table, **keys)
+    truth = {(r.user_id, r.event_id) for r in read_snapshot(spark, table).collect()}
+    bucket, v = sorted(read_manifest(table)["buckets"].items())[0]
+    stage = os.path.join(table, _STAGING)
+    shutil.copytree(
+        os.path.join(table, "buckets", f"bucket={bucket}", f"v={v}"),
+        os.path.join(stage, f"__bucket={bucket}"),
+    )
+
+    assert {(r.user_id, r.event_id) for r in read_snapshot(spark, table).collect()} == truth
+    expire_snapshots(table, keep_last=1)
+    assert list_snapshots(table) == [1]
+    assert {(r.user_id, r.event_id) for r in read_snapshot(spark, table).collect()} == truth
+
+    commit_merge(_batch(spark, [(0, 99, 2.0, datetime(2024, 1, 2))]), table, **keys)
+    assert not os.path.exists(stage)
+    got = {(r.user_id, r.event_id) for r in read_snapshot(spark, table).collect()}
+    assert got == (truth - {(0, 10)}) | {(0, 99)}

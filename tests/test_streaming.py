@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from yamr_spark.streaming.events import (
@@ -959,3 +960,102 @@ def test_substring_index_layout_is_self_describing(spark, sf_dir, tmp_path):
         if r.n_tokens >= 8
     }
     assert got == want
+
+
+_STORE_SCHEMA = "user_id long, event_id long, value double, ts timestamp"
+
+
+def _store_rows(spark, keys, day):
+    return spark.createDataFrame(
+        [(k, day * 1000 + k, float(k), dt.datetime(2024, 1, day)) for k in keys],
+        _STORE_SCHEMA,
+    )
+
+
+def _every_and_one_bucket(spark, n_buckets=8):
+    """(keys 0..63, which cover every bucket; the keys of ONE bucket).
+    The one-bucket set has several rows: on a one-row batch AQE drops
+    a stage for reasons unrelated to the bucket count."""
+    from yamr_spark.streaming.upsert import _bucket_of
+
+    rows = spark.range(64).select(
+        F.col("id").alias("k"), _bucket_of(F.col("id"), n_buckets).alias("b")
+    ).collect()
+    assert len({r.b for r in rows}) == n_buckets
+    one = [r.k for r in rows if r.b == rows[0].b]
+    assert len(one) > 1
+    return [r.k for r in rows], one
+
+
+def test_read_store_reads_dpo_store(spark, tmp_path):
+    """``read_store`` reads a store written by
+    ``merge_batch_into_store_dpo`` (every committed bucket carries the
+    ``_SUCCESS`` marker read_store checks)."""
+    from yamr_spark.streaming.upsert import (
+        keep_latest,
+        merge_batch_into_store_dpo,
+        read_store,
+    )
+
+    b1 = _store_rows(spark, range(10), day=1)
+    b2 = _store_rows(spark, [1, 3, 12], day=2)
+    store = str(tmp_path / "dpo")
+    for b in (b1, b2):
+        merge_batch_into_store_dpo(b, store, key="user_id", order="ts", tie="event_id")
+    got = {(r.user_id, r.event_id) for r in read_store(spark, store).collect()}
+    want = {
+        (r.user_id, r.event_id)
+        for r in keep_latest(b1.unionByName(b2), "user_id", "ts", "event_id").collect()
+    }
+    assert got == want and len(got) == 11
+
+
+@pytest.mark.parametrize(
+    "writer", ["merge_batch_into_store", "merge_batch_into_store_dpo"]
+)
+def test_merge_jobs_do_not_grow_with_touched_buckets(spark, tmp_path, job_count, writer):
+    """A merge touching one bucket runs as many Spark jobs as a merge
+    touching all eight: the touched buckets are written in one
+    partitioned write, not one job loop per bucket."""
+    from yamr_spark.streaming import upsert
+
+    merge = getattr(upsert, writer)
+    every, one = _every_and_one_bucket(spark)
+    store = str(tmp_path / "store")
+    keys = dict(key="user_id", order="ts", tie="event_id")
+    merge(_store_rows(spark, every, day=1), store, **keys)
+    b_one, b_all = _store_rows(spark, one, day=2), _store_rows(spark, every, day=3)
+    n_one = job_count(lambda: merge(b_one, store, **keys))
+    n_all = job_count(lambda: merge(b_all, store, **keys))
+    assert n_one == n_all, (n_one, n_all)
+    assert {r.event_id for r in upsert.read_store(spark, store).collect()} == {
+        3000 + k for k in every
+    }
+
+
+def test_staging_residue_invisible_and_swept(spark, tmp_path):
+    """A staging dir left by a crash between the staged write and the
+    bucket renames is invisible to ``read_store`` and to a plain scan
+    of the store root, and the next merge sweeps it."""
+    import os
+    import shutil
+
+    from yamr_spark.streaming.upsert import _STAGING, merge_batch_into_store, read_store
+
+    store = str(tmp_path / "store")
+    keys = dict(key="user_id", order="ts", tie="event_id")
+    merge_batch_into_store(_store_rows(spark, range(8), day=1), store, **keys)
+    truth = {(r.user_id, r.event_id) for r in read_store(spark, store).collect()}
+    bucket = sorted(d for d in os.listdir(store) if d.startswith("bucket="))[0]
+    stage = os.path.join(store, _STAGING)
+    shutil.copytree(
+        os.path.join(store, bucket), os.path.join(stage, "__" + bucket)
+    )
+
+    assert {(r.user_id, r.event_id) for r in read_store(spark, store).collect()} == truth
+    assert spark.read.parquet(store).count() == len(truth)
+
+    merge_batch_into_store(_store_rows(spark, [0], day=2), store, **keys)
+    assert not os.path.exists(stage)
+    got = {(r.user_id, r.event_id) for r in read_store(spark, store).collect()}
+    assert got == (truth - {(0, 1000)}) | {(0, 2000)}

@@ -137,8 +137,10 @@ def run_job(
     # per core regardless of input size — and the ~110 ms
     # ``.rdd.getNumPartitions()`` driver check (the metadata-cheap
     # estimate reads the file listing only). At real scale the scan
-    # already yields enough splits and no extra shuffle is added; a
-    # non-scan root keeps its upstream partitioning.
+    # already yields enough splits and no extra shuffle is added. A
+    # non-scan root (an in-memory or derived frame) has no file sizes to
+    # estimate from, so it falls back to the partition-count check:
+    # fewer than defaultParallelism partitions fan out to that width.
     from yamr_spark.tables import scan_spread_plan
 
     plan = scan_spread_plan(src, cost_factor=8192)
@@ -148,6 +150,8 @@ def run_job(
         py_width = target
         if est < target:
             src = src.repartition(target)
+    elif src.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+        src = src.repartition(spark.sparkContext.defaultParallelism)
     mapped = src.mapInPandas(map_fn, schema=map_schema)
 
     if mode == "grouped":

@@ -212,61 +212,15 @@ def current_mode() -> str:
     return env if env in _MODES else "local"
 
 
-def materialize_eager(df: DataFrame) -> DataFrame:
-    """``materialize()`` plus a computation BARRIER: the result is fully
-    computed before this returns, in EVERY mode. Required when the
-    consumer will OVERWRITE a path the input plan reads — upsert's
-    dynamic-partition-overwrite merge reads the store and then replaces
-    its partitions; under the default lazy ``local`` mode the overwrite
-    job itself would be the first action, reading store files while the
-    committer deletes them. ``disk`` (eager reliable checkpoint) and
-    ``parquet`` (synchronous write) already barrier; only ``local``
-    needs the eager flag."""
-    if current_mode() == "local":
-        out = df.localCheckpoint(eager=True)
-        _track(out)
-        return out
-    return materialize(df)
-
-
-def overwrite_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    dynamic: bool = False,
-) -> None:
-    """The SAFE overwrite sink: full computation barrier, THEN
-    ``mode("overwrite")``. Any read-store-then-overwrite consumer must
-    come through here (or call ``materialize_eager`` itself) — under
-    the default lazy ``local`` materialize mode, a plain
-    ``materialize(df).write.mode("overwrite")`` defers computation into
-    the overwrite job itself, which reads the store's files while the
-    committer deletes them (ADVICE r06; merge_batch_into_store_dpo
-    routes its dynamic-partition-overwrite write through here).
-
-    ``dynamic=True`` sets partitionOverwriteMode PER WRITE via the
-    DataFrameWriter option — never by toggling the session conf, which
-    two concurrent streams sharing one SparkSession could interleave
-    into a static-mode overwrite that wipes untouched partitions
-    (ADVICE r07)."""
-    out = materialize_eager(df)
-    w = out.write.mode("overwrite")
-    if dynamic:
-        w = w.option("partitionOverwriteMode", "dynamic")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def materialize(df: DataFrame) -> DataFrame:
     """Compute ``df`` once and return a DataFrame whose plan starts from
     the materialized result (see module docstring for the strategies).
 
     WARNING: LAZY in the default ``local`` mode — never feed the result
-    into an overwrite of a path the plan READS; use
-    ``materialize_eager`` or ``overwrite_parquet`` for that (the
-    overwrite job would otherwise be the first action, reading files
-    the committer is deleting)."""
+    into an overwrite of a path the plan READS: the overwrite job would
+    be the first action, reading files the committer is deleting. Write
+    to a fresh path and rename it in instead, as the keyed store's
+    staged write does (``streaming.upsert``)."""
     mode = current_mode()
     if mode == "local":
         out = df.localCheckpoint(eager=False)

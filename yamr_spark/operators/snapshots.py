@@ -9,21 +9,27 @@ Layout::
       buckets/bucket=K/v=N/   immutable parquet directories
       manifests/v=N.json      {"version": N, "buckets": {"K": N_K, ...}}
       LATEST                  current version number (atomic tmp+rename)
+      _staging/               the commit in flight (crash residue)
 
 Every commit writes NEW versions of only the buckets it touches and a
 new manifest whose untouched entries still point at the old bucket
 versions — data files are shared across snapshots, never rewritten in
-place. Readers resolve a manifest first, then read exactly the bucket
+place. The touched buckets are written by the keyed store's one staged
+write (``streaming.upsert._stage_merge``): one ``partitionBy`` write
+into ``_staging/``, outside ``buckets/`` so ``expire_snapshots`` never
+sees it, then one rename per bucket to ``buckets/bucket=K/v=N``.
+Readers resolve a manifest first, then read exactly the bucket
 versions it lists: a reader holding manifest N is isolated from any
 concurrent commit (nothing it references is ever mutated), and reading
 an old N IS time travel. ``expire_snapshots`` deletes manifests older
 than the retention and then any bucket version no retained manifest
 references — the standard mark-and-sweep.
 
-Scale: commit cost is O(touched buckets), reads are O(listed buckets);
-the manifest is KBs at any table size (one entry per bucket). On a
-real cluster the only change is listing/rename via the Hadoop
-FileSystem API instead of ``os``.
+Scale: a commit runs the same number of Spark jobs however many
+buckets it touches, and its renames are O(touched buckets); reads are
+O(listed buckets); the manifest is KBs at any table size (one entry
+per bucket). On a real cluster the only change is listing/rename via
+the Hadoop FileSystem API instead of ``os``.
 """
 
 from __future__ import annotations
@@ -33,9 +39,8 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from yamr_spark.streaming.upsert import _bucket_of, keep_latest
+from yamr_spark.streaming.upsert import _STAGING, _stage_merge
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
@@ -84,37 +89,34 @@ def commit_merge(
 ) -> int:
     """Merge a batch into the table as ONE new snapshot; returns the new
     version. Touched buckets get a new immutable ``v=<version>``
-    directory (old bucket ∪ batch slice → keep-latest); untouched
-    buckets are inherited by manifest pointer. The commit becomes
-    visible only at the final atomic LATEST swap — a crash before that
-    leaves orphan bucket dirs (swept by ``expire_snapshots``) and a
-    fully consistent table."""
-    spark = batch_df.sparkSession
+    directory (old bucket ∪ batch rows → keep-latest, staged in one
+    write and renamed in); untouched buckets are inherited by manifest
+    pointer. The commit becomes visible only at the final atomic LATEST
+    swap — a crash before that leaves the staging dir (swept by the
+    next commit) or orphan bucket versions (replaced by the next commit
+    of the same version, or swept by ``expire_snapshots``) and a fully
+    consistent table."""
     base = read_manifest(table_dir)
     version = base["version"] + 1
     buckets = dict(base["buckets"])
 
-    batch = batch_df.withColumn("__bucket", _bucket_of(F.col(key), n_buckets))
-    batch.persist()
-    try:
-        touched = [r[0] for r in batch.select("__bucket").distinct().collect()]
-        for b in touched:
-            new_dir = os.path.join(
-                table_dir, "buckets", f"bucket={b}", f"v={version}"
-            )
-            slice_df = batch.where(F.col("__bucket") == b).drop("__bucket")
-            if str(b) in buckets:
-                old_dir = os.path.join(
-                    table_dir, "buckets", f"bucket={b}", f"v={buckets[str(b)]}"
-                )
-                old = spark.read.parquet(old_dir).select(*slice_df.columns)
-                merged = keep_latest(old.unionByName(slice_df), key, order, tie)
-            else:
-                merged = keep_latest(slice_df, key, order, tie)
-            merged.coalesce(1).write.mode("overwrite").parquet(new_dir)
-            buckets[str(b)] = version
-    finally:
-        batch.unpersist()
+    def bucket_dir(b, v) -> str:
+        return os.path.join(table_dir, "buckets", f"bucket={b}", f"v={v}")
+
+    def committed(b: int) -> str | None:
+        v = buckets.get(str(b))
+        return None if v is None else bucket_dir(b, v)
+
+    stage = os.path.join(table_dir, _STAGING)
+    staged = _stage_merge(batch_df, stage, committed, key, order, tie, n_buckets)
+    for b, src in staged.items():
+        new_dir = bucket_dir(b, version)
+        if os.path.exists(new_dir):
+            shutil.rmtree(new_dir)
+        os.makedirs(os.path.dirname(new_dir), exist_ok=True)
+        os.rename(src, new_dir)
+        buckets[str(b)] = version
+    shutil.rmtree(stage, ignore_errors=True)
 
     with open(_manifest_path(table_dir, version), "w") as f:
         json.dump({"version": version, "buckets": buckets}, f)

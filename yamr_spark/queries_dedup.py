@@ -8,6 +8,7 @@ so the driver's value-hash compares real content, not just row counts.
 from __future__ import annotations
 
 import inspect as _inspect
+import re
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -706,7 +707,11 @@ def _pagerank_oracle(n_rounds: int = 3) -> str:
       FROM nodes n LEFT JOIN s{i} s ON s.dst = n.node CROSS JOIN nn
     )"""
         )
-    return head + "".join(rounds) + f"\n    SELECT node, r AS rank FROM r{n_rounds}"
+    sql = head + "".join(rounds) + f"\n    SELECT node, r AS rank FROM r{n_rounds}"
+    # DuckDB inlines a non-materialized CTE into every reference, so the
+    # chained rounds re-run the whole graph build per reference
+    # (minutes at sf0.001); materialized, each CTE runs once.
+    return re.sub(r"(?m)^(\s*\w+) AS \(", r"\1 AS MATERIALIZED (", sql)
 
 
 @register("pagerank_near_dup", oracle=_pagerank_oracle())

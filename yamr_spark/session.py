@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM, capped at 32g: on local[n] the driver heap
+    is the whole engine's memory, and the OS, the Python workers and
+    the page cache need the other half."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(32 << 10, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "yamr_spark",
     shuffle_partitions: int | None = None,
@@ -39,7 +47,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )

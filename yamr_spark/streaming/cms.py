@@ -52,7 +52,7 @@ def merge_cms_batch(
     # static-mode overwrite that wipes every other batch partition
     # (ADVICE r07)
     # no barrier needed: the delta plan reads only the batch, never
-    # the store it writes (contrast merge_batch_into_store_dpo)
+    # the store it writes
     (
         cells.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

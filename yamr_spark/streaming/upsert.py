@@ -9,27 +9,27 @@ row per key) is associative, so incremental per-batch application
 equals the one-shot batch result — which is exactly what the DuckDB
 oracle checks.
 
-Scale notes: the store is bucketed by key hash into a fixed directory
-layout, and each micro-batch rewrites ONLY the buckets its keys touch
-(read old bucket + union batch slice + keep-latest + atomic
-tmp-dir/rename swap). Untouched buckets are never read or written, so
-per-batch cost is O(batch ∪ touched-buckets), not O(store). The
-per-bucket driver loop issues sequential jobs — right for the
-dozens-of-buckets layouts here; at thousands of touched buckets the
-single-job rewrite is Spark's dynamic partition overwrite
-(partitionOverwriteMode=dynamic over a bucket-partitioned store:
-one pruned read of the touched buckets ∪ batch, one partitioned
-write), same merge semantics, job-level commit. On a real
-cluster the same pattern is what Delta/Iceberg MERGE INTO compiles to
-under the hood (copy-on-write of matched files); here it is expressed
-with plain parquet + directory swaps so the engine has no table-format
-dependency.
+One staged write path serves every keyed-store writer (this module's
+merges and ``operators.snapshots.commit_merge``), the way yamr's
+reducer writes every region's result in one sink pass: read the OLD
+versions of only the buckets the batch touches, union the batch,
+keep-latest, and write every touched bucket in ONE ``partitionBy``
+write to an underscore-named staging dir. Each bucket is then
+committed by directory renames. No write ever overwrites a path its
+own plan reads, so no computation barrier is needed, and the number
+of Spark jobs per merge does not grow with the number of touched
+buckets. Untouched buckets are never read or written, so per-batch
+cost is O(batch ∪ touched buckets), not O(store). On a real cluster
+the same pattern is what Delta/Iceberg MERGE INTO compiles to
+(copy-on-write of matched files); here it is plain parquet plus
+directory renames, so the engine has no table-format dependency.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -68,11 +68,60 @@ def _bucket_of(key_col, n_buckets: int):
     return F.pmod(F.xxhash64(key_col), F.lit(n_buckets))
 
 
+# Staging dir of the one partitioned write, inside the store (or the
+# snapshot table root). The leading underscore hides it from Spark's
+# FileIndex and from ``read_store``; a crash leaves it behind, and the
+# next merge sweeps it before staging again.
+_STAGING = "_staging"
+
+
+def _stage_merge(
+    batch_df: DataFrame,
+    stage_dir: str,
+    committed: Callable[[int], str | None],
+    key: str,
+    order: str,
+    tie: str,
+    n_buckets: int,
+) -> dict[int, str]:
+    """Stage the merge of ``batch_df`` for every bucket it touches and
+    return ``{bucket: staged dir}``. ``committed(b)`` names bucket
+    ``b``'s current directory, or None when the bucket has no data yet.
+    The touched old buckets ∪ the batch go through one keep-latest and
+    ONE ``partitionBy`` write into ``stage_dir``; each staged bucket
+    gets its own ``_SUCCESS`` marker once that write has committed.
+    The caller commits the staged dirs by renaming them into place."""
+    spark = batch_df.sparkSession
+    shutil.rmtree(stage_dir, ignore_errors=True)
+    batch = batch_df.withColumn("__bucket", _bucket_of(F.col(key), n_buckets))
+    batch.persist()
+    try:
+        touched = [r[0] for r in batch.select("__bucket").distinct().collect()]
+        if not touched:
+            return {}
+        old_dirs = [d for d in map(committed, touched) if d is not None]
+        merged = batch
+        if old_dirs:
+            old = spark.read.parquet(*old_dirs).select(*batch_df.columns)
+            old = old.withColumn("__bucket", _bucket_of(F.col(key), n_buckets))
+            merged = old.unionByName(batch)
+        keep_latest(merged, key, order, tie).write.partitionBy("__bucket").parquet(
+            stage_dir
+        )
+    finally:
+        batch.unpersist()
+    staged = {}
+    for b in touched:
+        staged[b] = os.path.join(stage_dir, f"__bucket={b}")
+        open(os.path.join(staged[b], "_SUCCESS"), "w").close()
+    return staged
+
+
 def _sweep_bucket_residue(store_dir: str) -> None:
     """Store-wide crash-residue sweep, run before every merge AND every
     read: a bucket stranded as ``_bucket_<b>.old`` by a crash between
     the two swap renames (committed ``bucket=<b>`` missing) is RESTORED;
-    superseded ``.old`` and partial ``.tmp`` staging dirs are dropped.
+    superseded ``.old`` and partial ``.tmp`` dirs are dropped.
     Sweeping all buckets — not just the ones the current batch touches —
     closes the ADVICE r05 hole where a direct read after a crash
     silently under-reported the untouched stranded bucket."""
@@ -100,48 +149,44 @@ def merge_batch_into_store(
     tie: str,
     n_buckets: int = 8,
 ) -> None:
-    """Batch-merge ``batch_df`` into the keyed store: for each BUCKET the
-    batch touches, read the old bucket, union the batch slice, keep the
-    latest row per key, and atomically swap the bucket directory. The
-    staging dir is ``_bucket_<b>.tmp`` — the leading underscore means
-    Spark's FileIndex AND ``read_store`` both ignore it, so a crash at
-    any point leaves only invisible residue (swept on retry), never a
-    half-committed bucket that reads as duplicated keys. The swap is
-    two renames (old → ``_bucket_<b>.old``, tmp → bucket), so the
-    window where a concurrent reader sees the bucket missing is two
-    metadata ops, not an rmtree of the old data."""
-    spark = batch_df.sparkSession
+    """Batch-merge ``batch_df`` into the keyed store: stage every bucket
+    the batch touches in one write (``_stage_merge``), then swap each
+    staged bucket in. Each swap renames the staged bucket to
+    ``_bucket_<b>.tmp``, the live bucket aside to ``_bucket_<b>.old``,
+    and the tmp into place — so a concurrent reader sees the bucket
+    missing for two metadata ops, not for an rmtree of the old data.
+    Every staging name starts with an underscore and holds no '='
+    (Spark's path filter exempts underscore names containing '=', for
+    partition dirs), so Spark's FileIndex AND ``read_store`` both
+    ignore it: a crash at any point leaves only invisible residue
+    (swept by the next merge), never a half-committed bucket that
+    reads as duplicated keys."""
+
+    def committed(b: int) -> str | None:
+        d = os.path.join(store_dir, f"bucket={b}")
+        return d if os.path.exists(os.path.join(d, "_SUCCESS")) else None
+
     # recover residue of any previously crashed merge STORE-WIDE before
     # touching anything (a stranded bucket may not be in this batch's
     # touched set)
     _sweep_bucket_residue(store_dir)
-    batch_df = batch_df.withColumn("__bucket", _bucket_of(F.col(key), n_buckets))
-    batch_df.persist()
-    try:
-        touched = [
-            r[0] for r in batch_df.select("__bucket").distinct().collect()
-        ]
-        for b in touched:
-            bucket_dir = os.path.join(store_dir, f"bucket={b}")
-            # no '=' in staging names: Spark's path filter exempts
-            # underscore names containing '=' (partition-dir support),
-            # so '_bucket=K.tmp' would be partition-discovered.
-            tmp = os.path.join(store_dir, f"_bucket_{b}.tmp")
-            old_stage = os.path.join(store_dir, f"_bucket_{b}.old")
-            slice_df = batch_df.where(F.col("__bucket") == b).drop("__bucket")
-            if os.path.exists(os.path.join(bucket_dir, "_SUCCESS")):
-                old = spark.read.parquet(bucket_dir).select(*slice_df.columns)
-                merged = keep_latest(old.unionByName(slice_df), key, order, tie)
-            else:
-                merged = keep_latest(slice_df, key, order, tie)
-            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-            if os.path.exists(bucket_dir):
-                os.rename(bucket_dir, old_stage)
-            os.rename(tmp, bucket_dir)
-            if os.path.exists(old_stage):
-                shutil.rmtree(old_stage)
-    finally:
-        batch_df.unpersist()
+    stage = os.path.join(store_dir, _STAGING)
+    staged = _stage_merge(batch_df, stage, committed, key, order, tie, n_buckets)
+    for b, src in staged.items():
+        bucket_dir = os.path.join(store_dir, f"bucket={b}")
+        tmp = os.path.join(store_dir, f"_bucket_{b}.tmp")
+        old_stage = os.path.join(store_dir, f"_bucket_{b}.old")
+        os.rename(src, tmp)
+        if os.path.exists(bucket_dir):
+            os.rename(bucket_dir, old_stage)
+        os.rename(tmp, bucket_dir)
+        if os.path.exists(old_stage):
+            shutil.rmtree(old_stage)
+    shutil.rmtree(stage, ignore_errors=True)
+
+
+# Every merge is now the single partitioned write this name stood for.
+merge_batch_into_store_dpo = merge_batch_into_store
 
 
 def stream_upsert_to_store(
@@ -187,11 +232,12 @@ def read_store(
     pass ``tombstone_col`` to hide deleted keys from readers.
 
     Only exact ``bucket=<int>`` dirs with a _SUCCESS marker qualify —
-    staging residue (``_bucket_K.tmp`` / ``_bucket_K.old``) is invisible
-    by its underscore prefix, and the strict name match additionally
-    excludes any legacy suffixed dir. The store-wide residue sweep runs
-    first, so a bucket stranded mid-swap by a crash is restored (not
-    silently missing) even when no merge has touched it since."""
+    staging residue (``_staging``, ``_bucket_K.tmp``, ``_bucket_K.old``)
+    is invisible by its underscore prefix, and the strict name match
+    additionally excludes any legacy suffixed dir. The store-wide
+    residue sweep runs first, so a bucket stranded mid-swap by a crash
+    is restored (not silently missing) even when no merge has touched
+    it since."""
     import re
 
     _sweep_bucket_residue(store_dir)
@@ -207,55 +253,3 @@ def read_store(
         # a bare ~col would null out and hide those keys)
         out = out.where(~F.coalesce(F.col(tombstone_col), F.lit(False)))
     return out
-
-
-def merge_batch_into_store_dpo(
-    batch_df: DataFrame,
-    store_dir: str,
-    key: str,
-    order: str,
-    tie: str,
-    n_buckets: int = 8,
-) -> None:
-    """The SINGLE-JOB form of ``merge_batch_into_store``: one pruned
-    read of the touched buckets ∪ the batch, one keep-latest, one
-    dynamic-partition-overwrite write — Spark's committer replaces
-    exactly the partitions present in the output (the touched buckets)
-    and leaves the rest untouched. Same merge semantics as the
-    per-bucket loop (test-pinned equal); right when a batch touches
-    hundreds+ of buckets and the sequential per-bucket jobs dominate.
-
-    The merged frame is materialized EAGERLY before the write because
-    the write overwrites the very partitions the plan reads; the
-    barrier (``materialize_eager`` — the default local materialize is
-    lazy and would defer computation into the overwrite job itself)
-    bounds that staging cost to touched-bucket data, not the store."""
-    import os
-
-    from yamr_spark.materialize import overwrite_parquet
-
-    spark = batch_df.sparkSession
-    batch = batch_df.withColumn("bucket", _bucket_of(F.col(key), n_buckets))
-    batch.persist()
-    try:
-        touched = [r[0] for r in batch.select("bucket").distinct().collect()]
-        if os.path.exists(store_dir) and any(
-            d.startswith("bucket=") for d in os.listdir(store_dir)
-        ):
-            old = (
-                spark.read.parquet(store_dir)
-                .where(F.col("bucket").isin(touched))
-                .select(*batch.columns)
-            )
-            merged = keep_latest(old.unionByName(batch), key, order, tie)
-        else:
-            merged = keep_latest(batch, key, order, tie)
-        # overwrite_parquet = the barrier-then-overwrite guard: the
-        # plan READS the very partitions the write replaces, so the
-        # merged frame must be fully computed before the committer
-        # starts deleting (materialize.py). dynamic=True scopes the
-        # overwrite mode to THIS write (no session-conf toggling two
-        # concurrent streams could interleave — ADVICE r07).
-        overwrite_parquet(merged, store_dir, partition_by=["bucket"], dynamic=True)
-    finally:
-        batch.unpersist()
