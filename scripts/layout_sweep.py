@@ -3,21 +3,21 @@ return BIT-IDENTICAL rows under different shuffle layouts
 (spark.sql.shuffle.partitions 8 vs 37) — the proactive gate for the
 float-accumulation-order flake class (a float AVG summed in shuffle
 order changes last-ulp bits with the layout; the r07 stratified-sample
-flake was exactly this). Strict canon: float bits via hex, type-family
-tags, no rounding.
+flake was exactly this). Strict comparison by perfbench/canon.py's
+frame_digest: float bits via hex, type-family tags, no rounding.
 
 Run: python scripts/layout_sweep.py [start] [end]   (name-index slice)
      python scripts/layout_sweep.py <substr> ...    (name filter)
 Expect final line RESULT: ALL-INVARIANT. Last full run: r10, 230/230.
 """
 
-import decimal
-import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-import numpy as np
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.append(os.path.join(ROOT, "perfbench"))
+from canon import frame_digest
 from pyspark.sql import SparkSession
 
 spark = (
@@ -35,37 +35,11 @@ qs = e.queries()
 SF = "/root/testdata/sf0.01"
 
 
-def canon(v):
-    if v is None:
-        return None
-    if isinstance(v, (bool, np.bool_)):
-        return ("b", bool(v))
-    if isinstance(v, (int, np.integer)):
-        return ("i", int(v))
-    if isinstance(v, (float, np.floating)):
-        f = float(v)
-        return ("f", "nan") if math.isnan(f) else ("f", f.hex())
-    if isinstance(v, decimal.Decimal):
-        return ("d", str(v))
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return ("a", tuple(canon(x) for x in v))
-    if isinstance(v, dict):
-        return ("m", tuple(sorted((k, canon(x)) for k, x in v.items())))
-    if isinstance(v, (bytes, bytearray)):
-        return ("x", bytes(v))
-    if hasattr(v, "isoformat"):
-        return ("t", v.isoformat())
-    return (type(v).__name__, v)
-
-
-def rows_at(name, parts):
+def digest_at(name, parts):
+    """(digest, row count) of ``name``'s result under ``parts`` shuffle
+    partitions."""
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    pdf = qs[name](spark, SF).toPandas()
-    cols = sorted(pdf.columns)
-    return sorted(
-        (tuple(canon(v) for v in r) for r in pdf[cols].itertuples(index=False)),
-        key=repr,
-    )
+    return frame_digest(qs[name](spark, SF).toPandas())
 
 
 def main():
@@ -79,12 +53,12 @@ def main():
         names = names[int(args[0]) : int(args[1])]
     for name in names:
         try:
-            a, b = rows_at(name, 8), rows_at(name, 37)
+            a, b = digest_at(name, 8), digest_at(name, 37)
             if a != b:
                 fails.append(name)
                 print(f"  {name}: LAYOUT-SENSITIVE", flush=True)
             else:
-                print(f"  {name}: invariant rows={len(a)}", flush=True)
+                print(f"  {name}: invariant rows={a[1]}", flush=True)
         except Exception as ex:  # noqa: BLE001 — the sweep must finish
             fails.append(name)
             print(f"  {name}: ERROR {type(ex).__name__} {str(ex)[:120]}", flush=True)

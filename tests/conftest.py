@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import sys
 
 import pytest
 
@@ -11,6 +12,10 @@ _TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
 os.environ["PYTHONPATH"] = (
     _TESTS_DIR + os.pathsep + os.environ.get("PYTHONPATH", "")
 )
+
+# The oracle tests compare with perfbench/canon.py, the one strict
+# comparison rule; appended, so no perfbench module shadows another.
+sys.path.append(os.path.join(os.path.dirname(_TESTS_DIR), "perfbench"))
 
 from yamr_spark.session import get_spark  # noqa: E402
 

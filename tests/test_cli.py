@@ -3,6 +3,7 @@ yamr.py start_task / task_result lifecycle over the compat shim."""
 
 from __future__ import annotations
 
+import json
 import subprocess
 import sys
 import textwrap
@@ -28,6 +29,27 @@ JOB_SCRIPT = textwrap.dedent(
 )
 
 
+# the shape of the reference's map_libs/max_year_temp.py: the mapper
+# parses its WHOLE input chunk as one JSON array of [yyyymm, temp] pairs
+MAX_TEMP_SCRIPT = textwrap.dedent(
+    '''
+    import json
+    from itertools import groupby
+
+    class Mapper:
+        def run_map(self, data):
+            return [(int(str(k)[:4]), float(v)) for k, v in json.loads(data)]
+
+    class Reducer:
+        def run_reduce(self, pairs):
+            return [
+                (k, max(v for _, v in grp))
+                for k, grp in groupby(pairs, key=lambda t: t[0])
+            ]
+    '''
+)
+
+
 def _write_fixture(tmp_path):
     script = tmp_path / "wc_job.py"
     script.write_text(JOB_SCRIPT)
@@ -41,6 +63,30 @@ def test_run_script_job_word_count(spark, tmp_path):
     df = run_script_job(spark, inp, script)
     got = {r["key"]: r["value"] for r in df.collect()}
     assert got == {"the": 3, "cat": 2, "sat": 2, "ran": 1, "dog": 1}
+
+
+def test_run_script_job_whole_file_chunks(spark, tmp_path):
+    """chunks=True feeds run_map each file whole (the reference's chunk
+    semantics): the mapper json.loads the file, which line feeding would
+    hand invalid JSON. Pinned against ground truth computed from the
+    file in Python."""
+    pairs = [
+        [201901, 3.5], [201907, 31.0], [201912, 1.0],
+        [202001, -2.0], [202008, 29.5], [202103, 12.25],
+    ]
+    inp = tmp_path / "temperature.json"
+    inp.write_text(json.dumps(pairs, indent=1))  # no single line parses
+    script = tmp_path / "max_temp_job.py"
+    script.write_text(MAX_TEMP_SCRIPT)
+    df = run_script_job(
+        spark, str(inp), str(script), map_schema="key long, value double", chunks=True
+    )
+    got = {int(r["key"]): float(r["value"]) for r in df.collect()}
+    truth: dict[int, float] = {}
+    for k, v in json.loads(inp.read_text()):
+        y = int(str(k)[:4])
+        truth[y] = max(truth.get(y, float("-inf")), float(v))
+    assert got == truth and len(truth) == 3
 
 
 def test_render_and_result_roundtrip(spark, tmp_path):

@@ -1,15 +1,23 @@
-"""Differential check: every registered query with an oracle must match
-DuckDB on the same parquet — a local replica of the driver's t2 gate
-(row count + column names + order-insensitive values), run at sf0.001
-for speed (the driver runs sf0.01).
+"""Differential check: every registered query must match its DuckDB
+oracle on the same parquet — a strict replica of the driver's t2 gate,
+run at sf0.001 for speed (the driver runs sf0.01). Values compare by
+``perfbench/canon.py``'s ``frame_digest``: exact float bits, type
+families, sorted column names, order-insensitive rows.
+
+The same pass checks the driver's canonicalization contract on the
+DataFrame it already builds: the production driver sorts the pandas
+result and factorizes each column, which crashes on unhashable values
+— bytearrays (BinaryType), lists (ArrayType), dicts (MapType) and Rows
+(StructType). Registered queries project hex/digest for bytes and
+array_join/to_json for collections instead.
 """
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pytest
+from canon import frame_digest
+from pyspark.sql import types as T
 
 from yamr_spark.registry import all_oracles, all_queries
 from yamr_spark.tables import TABLE_NAMES
@@ -24,19 +32,11 @@ def _duck(sf_dir: str):
     return con
 
 
-def _normalize(df):  # pandas → sorted list of tuples with rounded floats
-    cols = sorted(df.columns)
-    df = df[cols]
-    rows = []
-    for row in df.itertuples(index=False):
-        norm = []
-        for v in row:
-            if isinstance(v, float):
-                norm.append(None if math.isnan(v) else round(v, 6))
-            else:
-                norm.append(v)
-        rows.append(tuple(norm))
-    return sorted(rows, key=repr)
+def _driver_hashable(dt: T.DataType) -> bool:
+    """Only scalar types survive pandas factorize; arrays become lists
+    (unhashable), maps become dicts, structs become Rows, binary
+    becomes bytearray."""
+    return not isinstance(dt, (T.BinaryType, T.MapType, T.ArrayType, T.StructType))
 
 
 def _query_names():
@@ -45,15 +45,19 @@ def _query_names():
 
 @pytest.mark.parametrize("name", _query_names())
 def test_query_matches_oracle(spark, sf_dir, name):
-    q = all_queries()[name]
-    spark_df = q(spark, sf_dir).toPandas()
-    con = _duck(sf_dir)
-    duck_df = con.execute(all_oracles()[name]).fetchdf()
+    sdf = all_queries()[name](spark, sf_dir)
+    offenders = [f.name for f in sdf.schema.fields if not _driver_hashable(f.dataType)]
+    assert not offenders, (
+        "driver canonicalizer cannot hash these columns — project hex/"
+        f"digest/array_join/to_json instead: { {name: offenders} }"
+    )
+    spark_df = sdf.toPandas()
+    duck_df = _duck(sf_dir).execute(all_oracles()[name]).fetchdf()
     assert sorted(spark_df.columns) == sorted(duck_df.columns), (
         f"{name}: column mismatch {spark_df.columns} vs {duck_df.columns}"
     )
     assert len(spark_df) == len(duck_df), f"{name}: row count mismatch"
-    assert _normalize(spark_df) == _normalize(duck_df), f"{name}: value mismatch"
+    assert frame_digest(spark_df) == frame_digest(duck_df), f"{name}: value mismatch"
 
 
 def test_entry_smoke(spark):

@@ -17,28 +17,12 @@ driver's t2 gate runs, on data the driver never generates.
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
-import pytest
+from canon import frame_digest
 
 from yamr_spark.registry import all_oracles, all_queries
-
-
-def _normalize(df):
-    cols = sorted(df.columns)
-    df = df[cols]
-    rows = []
-    for row in df.itertuples(index=False):
-        norm = []
-        for v in row:
-            if isinstance(v, float):
-                norm.append(None if math.isnan(v) else round(v, 6))
-            else:
-                norm.append(v)
-        rows.append(tuple(norm))
-    return sorted(rows, key=repr)
 
 
 def _compare(spark, name: str, fixture_dir: str, views: dict[str, str]):
@@ -54,7 +38,7 @@ def _compare(spark, name: str, fixture_dir: str, views: dict[str, str]):
     assert len(spark_df) == len(duck_df), (
         f"{name}: {len(spark_df)} spark rows vs {len(duck_df)} oracle rows"
     )
-    assert _normalize(spark_df) == _normalize(duck_df)
+    assert frame_digest(spark_df) == frame_digest(duck_df), f"{name}: value mismatch"
     return spark_df
 
 

@@ -139,7 +139,8 @@ def test_read_missing_snapshot_raises(spark, tmp_path):
 def test_commit_jobs_do_not_grow_with_touched_buckets(spark, tmp_path, job_count):
     """A commit touching one bucket runs as many Spark jobs as a commit
     touching all eight: one partitioned write stages every touched
-    bucket."""
+    bucket. The old buckets are read with the batch's schema, so at
+    most five jobs run."""
     from pyspark.sql import functions as F
 
     from yamr_spark.streaming.upsert import _bucket_of
@@ -161,7 +162,7 @@ def test_commit_jobs_do_not_grow_with_touched_buckets(spark, tmp_path, job_count
     b_one, b_all = batch(one, 2), batch(every, 3)
     n_one = job_count(lambda: commit_merge(b_one, table, **keys))
     n_all = job_count(lambda: commit_merge(b_all, table, **keys))
-    assert n_one == n_all, (n_one, n_all)
+    assert n_one == n_all <= 5, (n_one, n_all)
     assert {r.event_id for r in read_snapshot(spark, table).collect()} == {
         3000 + k for k in every
     }

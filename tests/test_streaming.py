@@ -1016,7 +1016,8 @@ def test_read_store_reads_dpo_store(spark, tmp_path):
 def test_merge_jobs_do_not_grow_with_touched_buckets(spark, tmp_path, job_count, writer):
     """A merge touching one bucket runs as many Spark jobs as a merge
     touching all eight: the touched buckets are written in one
-    partitioned write, not one job loop per bucket."""
+    partitioned write, not one job loop per bucket. The old buckets are
+    read with the batch's schema, so at most five jobs run."""
     from yamr_spark.streaming import upsert
 
     merge = getattr(upsert, writer)
@@ -1027,7 +1028,7 @@ def test_merge_jobs_do_not_grow_with_touched_buckets(spark, tmp_path, job_count,
     b_one, b_all = _store_rows(spark, one, day=2), _store_rows(spark, every, day=3)
     n_one = job_count(lambda: merge(b_one, store, **keys))
     n_all = job_count(lambda: merge(b_all, store, **keys))
-    assert n_one == n_all, (n_one, n_all)
+    assert n_one == n_all <= 5, (n_one, n_all)
     assert {r.event_id for r in upsert.read_store(spark, store).collect()} == {
         3000 + k for k in every
     }

@@ -90,6 +90,8 @@ def _stage_merge(
     The touched old buckets ∪ the batch go through one keep-latest and
     ONE ``partitionBy`` write into ``stage_dir``; each staged bucket
     gets its own ``_SUCCESS`` marker once that write has committed.
+    The old buckets are read with the batch's schema, so no schema
+    inference job runs.
     The caller commits the staged dirs by renaming them into place."""
     spark = batch_df.sparkSession
     shutil.rmtree(stage_dir, ignore_errors=True)
@@ -102,7 +104,7 @@ def _stage_merge(
         old_dirs = [d for d in map(committed, touched) if d is not None]
         merged = batch
         if old_dirs:
-            old = spark.read.parquet(*old_dirs).select(*batch_df.columns)
+            old = spark.read.schema(batch_df.schema).parquet(*old_dirs)
             old = old.withColumn("__bucket", _bucket_of(F.col(key), n_buckets))
             merged = old.unionByName(batch)
         keep_latest(merged, key, order, tie).write.partitionBy("__bucket").parquet(
