@@ -251,9 +251,12 @@ def test_shared_resolves_registry_hooks_at_call_time(spark, monkeypatch):
 
 def test_query_modules_share_builds_only_through_shared():
     """No query module keeps its own appId-keyed frame cache or pins
-    blocks itself. ``_WINNOW_BUCKET_CACHE`` is the one exception: it
-    holds a catalog table name that must survive per-pass clears."""
+    blocks itself, and none decides by hand that a store is already
+    built: stores go through ``tmpdirs.session_store``, so no module
+    references ``store_complete``, ``"_SUCCESS"``, ``shutil``,
+    ``atexit`` or ``os.path.exists``."""
     pkg = os.path.dirname(M.__file__)
+    forbidden = {"store_complete", "_SUCCESS", "shutil", "atexit", "os.path.exists"}
     bad = []
     for path in sorted(glob.glob(os.path.join(pkg, "queries_*.py"))):
         mod = os.path.basename(path)
@@ -272,6 +275,13 @@ def test_query_modules_share_builds_only_through_shared():
                 if is_dict:
                     module_dicts |= {t.id for t in targets if isinstance(t, ast.Name)}
         for node in ast.walk(tree):
+            refs = {getattr(node, a, None) for a in ("id", "attr", "module", "value")}
+            if isinstance(node, ast.Import | ast.ImportFrom):
+                refs |= {a.name for a in node.names}
+            if "exists" in refs and ast.unparse(node) == "os.path.exists":
+                refs.add("os.path.exists")
+            for ref in refs & forbidden:
+                bad.append(f"{mod}:{node.lineno} references {ref}")
             if isinstance(node, ast.Call):
                 fn = node.func
                 name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
@@ -287,7 +297,7 @@ def test_query_modules_share_builds_only_through_shared():
                 }
                 bad += [
                     f"{mod}:{node.name} keys {d} by applicationId"
-                    for d in sorted(used - {"_WINNOW_BUCKET_CACHE"})
+                    for d in sorted(used)
                 ]
     assert not bad, bad
 

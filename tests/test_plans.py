@@ -133,8 +133,12 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
 
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    write_bucketed(li, "b_lineitem", 8, ["l_orderkey"], ["l_orderkey"])
-    write_bucketed(o, "b_orders", 8, ["o_orderkey"], ["o_orderkey"])
+    write_bucketed(
+        li, "b_lineitem", str(tmp_path / "li"), 8, ["l_orderkey"], ["l_orderkey"]
+    )
+    write_bucketed(
+        o, "b_orders", str(tmp_path / "o"), 8, ["o_orderkey"], ["o_orderkey"]
+    )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -841,28 +845,15 @@ def test_single_partition_window_detector(spark):
     assert single_partition_window_count(capped) == 0
 
 
-def test_headline_single_partition_windows_are_audited(spark, sf_dir):
-    """Sweep EVERY bench headline plan: the set of queries with a
-    Window fed by Exchange SinglePartition must equal the human-audited
-    grain-bounded allowlist exactly — a new unbounded global window
-    sneaking into a headline plan fails here, and so does a stale
-    allowlist entry whose plan no longer windows on one partition."""
-    import bench
-    from yamr_spark.plans import (
-        ALLOWED_SINGLE_PARTITION_WINDOWS,
-        single_partition_window_count,
-    )
-    from yamr_spark.registry import all_queries
-
-    qs = all_queries()
-    swept = bench.HEADLINE + bench.CERTIFICATION
-    hits = {
-        name
-        for name in swept
-        if single_partition_window_count(qs[name](spark, sf_dir)) > 0
-    }
-    expected = set(ALLOWED_SINGLE_PARTITION_WINDOWS) & set(swept)
-    assert hits == expected, (
-        f"unaudited 1p-windows: {sorted(hits - expected)}; "
-        f"stale allowlist: {sorted(expected - hits)}"
-    )
+def test_winnow_incremental_reuses_bucketed_layout(spark, sf_dir):
+    """winnow_incremental's fp-keyed groupBy/joins read the fp-bucketed
+    fingerprint table and reuse its hash partitioning: 11 exchanges,
+    against 15 when Spark is told to ignore the bucket spec."""
+    q = all_queries()["winnow_incremental"]
+    assert shuffle_count(q(spark, sf_dir)) == 11
+    key = "spark.sql.sources.bucketing.enabled"
+    spark.conf.set(key, "false")
+    try:
+        assert shuffle_count(q(spark, sf_dir)) == 15
+    finally:
+        spark.conf.unset(key)

@@ -10,15 +10,24 @@ result and factorizes each column, which crashes on unhashable values
 — bytearrays (BinaryType), lists (ArrayType), dicts (MapType) and Rows
 (StructType). Registered queries project hex/digest for bytes and
 array_join/to_json for collections instead.
+
+Bench headline and certification plans are also audited: a window
+fed by one partition must be in ``ALLOWED_SINGLE_PARTITION_WINDOWS``,
+and every allowlisted plan must still have one.
 """
 
 from __future__ import annotations
 
+import bench
 import duckdb
 import pytest
 from canon import frame_digest
 from pyspark.sql import types as T
 
+from yamr_spark.plans import (
+    ALLOWED_SINGLE_PARTITION_WINDOWS,
+    single_partition_window_count,
+)
 from yamr_spark.registry import all_oracles, all_queries
 from yamr_spark.tables import TABLE_NAMES
 
@@ -51,6 +60,11 @@ def test_query_matches_oracle(spark, sf_dir, name):
         "driver canonicalizer cannot hash these columns — project hex/"
         f"digest/array_join/to_json instead: { {name: offenders} }"
     )
+    if name in bench.HEADLINE + bench.CERTIFICATION:
+        # read the pre-execution plan, as the bench's first build sees it
+        assert (single_partition_window_count(sdf) > 0) == (
+            name in ALLOWED_SINGLE_PARTITION_WINDOWS
+        ), f"{name}: single-partition window unaudited or allowlist entry stale"
     spark_df = sdf.toPandas()
     duck_df = _duck(sf_dir).execute(all_oracles()[name]).fetchdf()
     assert sorted(spark_df.columns) == sorted(duck_df.columns), (

@@ -427,14 +427,11 @@ def q_schema_evolution_stats(spark, sf_dir):
     need a rewrite of old generations (mergeSchema costs footer reads
     only, so production pins the merged schema once and passes it
     explicitly thereafter)."""
-    import os
-
-    from yamr_spark.tmpdirs import session_dir, store_complete
+    from yamr_spark.tmpdirs import session_store
 
     docs = table(spark, sf_dir, "documents")
-    base = session_dir(f"schema_evo:{sf_dir}", "yamr_schema_evo_")
-    store = os.path.join(base, "store")
-    if not store_complete(store):
+
+    def build(store):
         g1 = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "lang", "n_chars")
         g1.write.mode("overwrite").parquet(store)
         g2 = docs.where(F.col("doc_id") % 2 == 1).select(
@@ -444,6 +441,8 @@ def q_schema_evolution_stats(spark, sf_dir):
             (F.col("n_chars") % 97).cast("long").alias("quality"),
         )
         g2.write.mode("append").parquet(store)
+
+    store = session_store(f"schema_evo:{sf_dir}", build)
     merged = spark.read.option("mergeSchema", "true").parquet(store)
     return merged.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -470,10 +469,8 @@ def q_zorder_store_stats(spark, sf_dir):
     of the plane, so either predicate alone prunes via footer stats
     (span reduction pinned by unit test); the rollup proves the
     clustered rewrite lost nothing."""
-    import os
-
     from yamr_spark.sources import write_zorder_store
-    from yamr_spark.tmpdirs import session_dir, store_complete
+    from yamr_spark.tmpdirs import session_store
 
     ev = table(spark, sf_dir, "events").select(
         "event_id",
@@ -481,10 +478,10 @@ def q_zorder_store_stats(spark, sf_dir):
         F.pmod("user_id", F.lit(16)).cast("long").alias("u4"),
         F.pmod("event_id", F.lit(16)).cast("long").alias("e4"),
     )
-    base = session_dir(f"zorder:{sf_dir}", "yamr_zorder_")
-    store = os.path.join(base, "store")
-    if not store_complete(store):
-        write_zorder_store(ev, store, "u4", "e4", n_files=16, bits=4)
+    store = session_store(
+        f"zorder:{sf_dir}",
+        lambda p: write_zorder_store(ev, p, "u4", "e4", n_files=16, bits=4),
+    )
     back = spark.read.parquet(store)
     return (
         back.where((F.col("u4") < 4) & (F.col("e4") < 4))
@@ -543,16 +540,14 @@ def q_sorted_store_stats(spark, sf_dir):
     unit test via pyarrow footer stats), read back under a range
     predicate that parquet row-group statistics can skip on; the
     rollup proves the clustered rewrite lost nothing."""
-    import os
-
     from yamr_spark.sources import write_sorted_store
-    from yamr_spark.tmpdirs import session_dir, store_complete
+    from yamr_spark.tmpdirs import session_store
 
     ev = table(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
-    base = session_dir(f"sorted_store:{sf_dir}", "yamr_sorted_")
-    store = os.path.join(base, "store")
-    if not store_complete(store):
-        write_sorted_store(ev, store, "user_id", n_files=8)
+    store = session_store(
+        f"sorted_store:{sf_dir}",
+        lambda p: write_sorted_store(ev, p, "user_id", n_files=8),
+    )
     back = spark.read.parquet(store)
     return (
         back.where(F.col("user_id").between(10, 20))

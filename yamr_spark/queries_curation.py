@@ -315,16 +315,14 @@ def q_split_store_train_counts(spark, sf_dir):
     tests/test_plans.py) and report per-lang counts. The oracle replays
     the split arithmetic on the original table, so a row landing in the
     wrong partition fails the hash."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from yamr_spark.tmpdirs import session_dir, store_complete
+    from yamr_spark.tmpdirs import session_store
 
     docs = table(spark, sf_dir, "documents")
-    store = os.path.join(session_dir(f"splitstore:{sf_dir}", "yamr_split_"), "store")
-    if not store_complete(store):
-        C.write_split_corpus(docs, store)
+    store = session_store(
+        f"splitstore:{sf_dir}", lambda p: C.write_split_corpus(docs, p)
+    )
     return (
         C.read_split(spark, store, "train")
         .groupBy("lang")
@@ -526,16 +524,12 @@ def q_compacted_store_counts(spark, sf_dir):
     planning), then read back and rolled up — any row lost, duplicated,
     or mis-partitioned by the rewrite fails the content hash against
     the uncompacted oracle."""
-    import os
-
     from pyspark.sql import functions as F
 
     from yamr_spark.operators.maintenance import compact_store
-    from yamr_spark.tmpdirs import session_dir, store_complete
+    from yamr_spark.tmpdirs import session_store
 
-    base = session_dir(f"compact_store:{sf_dir}", "yamr_compact_")
-    store = os.path.join(base, "store")
-    if not store_complete(store):
+    def build(store):
         docs = table(spark, sf_dir, "documents").select(
             "doc_id", "n_chars", "lang"
         )
@@ -543,6 +537,8 @@ def q_compacted_store_counts(spark, sf_dir):
             store
         )
         compact_store(spark, store, target_bytes=64 * 1024 * 1024)
+
+    store = session_store(f"compact_store:{sf_dir}", build)
     return (
         spark.read.parquet(store)
         .groupBy("lang")

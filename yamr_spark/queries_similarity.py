@@ -14,7 +14,7 @@ from yamr_spark.materialize import materialize, shared
 from yamr_spark.operators import similarity as S
 from yamr_spark.registry import register
 from yamr_spark.tables import table
-from yamr_spark.tmpdirs import session_dir, store_complete
+from yamr_spark.tmpdirs import session_store
 
 _COS = (
     "ROUND(list_dot_product({a}, {b}) / "
@@ -54,10 +54,6 @@ def _ivf_shared(spark, sf_dir: str, c: int = 8):
     return shared(spark, "ivf", (sf_dir, c), build)
 
 
-def _frozen_params_dir(sf_dir: str) -> str:
-    return session_dir(f"ivfpqfz_params:{sf_dir}", "yamr_ivfpqfz_params_")
-
-
 def _frozen_sample(spark, sf_dir: str):
     emb = table(spark, sf_dir, "embeddings")
     return emb, emb.filter(F.col("vec_id") < _FROZEN_TRAIN_N)
@@ -76,19 +72,19 @@ def _frozen_shared(spark, sf_dir: str):
     representatives (``kmeans_centroids``, ``ann_ivf_pq_kmeans_topk``,
     ``ivf_assign``)."""
 
-    def build():
-        base = _frozen_params_dir(sf_dir)
+    def train(base):
+        emb, sample = _frozen_sample(spark, sf_dir)
         cdir = os.path.join(base, "cents")
-        adir = os.path.join(base, "assign")
-        if not (store_complete(cdir) and store_complete(adir)):
-            emb, sample = _frozen_sample(spark, sf_dir)
-            S.kmeans_centroid_vectors(sample, c=8, iters=1).write.mode(
-                "overwrite"
-            ).parquet(cdir)
-            S.ivf_assign(emb, cents=spark.read.parquet(cdir)).select(
-                "vec_id", "centroid_id"
-            ).write.mode("overwrite").parquet(adir)
-        return spark.read.parquet(cdir), spark.read.parquet(adir)
+        S.kmeans_centroid_vectors(sample, c=8, iters=1).write.parquet(cdir)
+        S.ivf_assign(emb, cents=spark.read.parquet(cdir)).select(
+            "vec_id", "centroid_id"
+        ).write.parquet(os.path.join(base, "assign"))
+
+    def build():
+        base = session_store(f"ivfpqfz_params:{sf_dir}", train)
+        return tuple(
+            spark.read.parquet(os.path.join(base, d)) for d in ("cents", "assign")
+        )
 
     return shared(spark, "frozen_ivf", (sf_dir,), build)
 
@@ -98,14 +94,14 @@ def _frozen_books_shared(spark, sf_dir: str, m: int = 4, k: int = 16):
     persisted beside the frozen code stores per (sf_dir, m, k) — see
     :func:`_frozen_shared` for the layout rationale."""
 
+    def train(bdir):
+        _, sample = _frozen_sample(spark, sf_dir)
+        S.pq_codebooks_kmeans(sample, m=m, k=k).write.parquet(bdir)
+
     def build():
-        bdir = os.path.join(_frozen_params_dir(sf_dir), f"books_m{m}_k{k}")
-        if not store_complete(bdir):
-            _, sample = _frozen_sample(spark, sf_dir)
-            S.pq_codebooks_kmeans(sample, m=m, k=k).write.mode(
-                "overwrite"
-            ).parquet(bdir)
-        return spark.read.parquet(bdir)
+        return spark.read.parquet(
+            session_store(f"ivfpqfz_books:{sf_dir}:{m}:{k}", train)
+        )
 
     return shared(spark, "frozen_books", (sf_dir, m, k), build)
 
@@ -266,17 +262,13 @@ def q_ivf_probe_partitioned(spark, sf_dir):
     directories (literal partition filter → directory pruning; pinned by
     tests/test_plans.py). Must produce exactly ann_ivf_topk's answer —
     the oracle replays the same probe/assign arithmetic."""
-    import os
-
-    from yamr_spark.tmpdirs import session_dir, store_complete
-
     emb = table(spark, sf_dir, "embeddings")
+    cents, assign = _ivf_shared(spark, sf_dir, c=8)
     # per-process store, cleaned at exit; the store is immutable once
     # written, so repeat invocations skip the build and time the probe
-    store = os.path.join(session_dir(f"ivf:{sf_dir}", "yamr_ivf_store_"), "store")
-    cents, assign = _ivf_shared(spark, sf_dir, c=8)
-    if not store_complete(store):
-        S.write_ivf_store(emb, store, c=8, assign=assign)
+    store = session_store(
+        f"ivf:{sf_dir}", lambda p: S.write_ivf_store(emb, p, c=8, assign=assign)
+    )
     return S.ivf_store_topk(
         spark, store, emb, k=5, num_queries=10, c=8, nprobe=2, cents=cents
     )
@@ -2148,17 +2140,12 @@ def q_ivf_pq_store_probe(spark, sf_dir):
     vectors are never read on the serving path (query-side LUT comes
     from the 10 query vectors alone). Must produce exactly
     ann_ivf_pq_topk's answer — same oracle."""
-    import os
-
-    from yamr_spark.tmpdirs import session_dir, store_complete
-
     emb = table(spark, sf_dir, "embeddings")
     cents, assign = _ivf_shared(spark, sf_dir, c=8)
-    store = os.path.join(
-        session_dir(f"ivfpq:{sf_dir}", "yamr_ivfpq_store_"), "store"
+    store = session_store(
+        f"ivfpq:{sf_dir}",
+        lambda p: S.write_ivf_pq_store(emb, p, c=8, assign=assign),
     )
-    if not store_complete(store):
-        S.write_ivf_pq_store(emb, store, c=8, assign=assign)
     return S.ivf_pq_store_topk(
         spark, store, emb, topk=5, n_queries=10, c=8, nprobe=2, cents=cents
     )
@@ -2204,26 +2191,15 @@ def q_ivf_pq_store_incremental(spark, sf_dir):
     equal ann_ivf_pq_topk on the full corpus exactly — same oracle:
     per-vector assignment/encoding depend only on (vector, params), so
     incremental vs batch construction is value-invisible."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
-
-    from yamr_spark.tmpdirs import session_dir
 
     emb = table(spark, sf_dir, "embeddings")
     cents, assign = _ivf_shared(spark, sf_dir, c=8)
     books = S.pq_codebooks(emb)
-    base = session_dir(f"ivfpq_inc:{sf_dir}", "yamr_ivfpq_inc_")
-    store = os.path.join(base, "store")
-    # the store commits in TWO jobs (build + append), so Spark's
-    # _SUCCESS (written by the first) can't gate completeness — a crash
-    # between them would leave a trusted half-store. Own end-to-end
-    # marker, written only after the append (the sketch stores'
-    # marker-last discipline).
-    marker = os.path.join(base, "_INC_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(store, ignore_errors=True)
+
+    def build(store):
+        # two jobs (build + append): only session_store's marker,
+        # written after both, says the whole store committed
         cut = 260  # both halves non-trivial at every fixture sf
         S.write_ivf_pq_store(
             emb.where(F.col("vec_id") < cut), store, c=8,
@@ -2234,8 +2210,8 @@ def q_ivf_pq_store_incremental(spark, sf_dir):
             S.ivf_pq_store_append(
                 second, store, books=books, cents=cents, assign=assign
             )
-        with open(marker, "w"):
-            pass
+
+    store = session_store(f"ivfpq_inc:{sf_dir}", build)
     return S.ivf_pq_store_topk(
         spark, store, emb, topk=5, n_queries=10, c=8, nprobe=2,
         cents=cents, books=books,
@@ -2394,24 +2370,16 @@ def q_ivf_pq_store_frozen(spark, sf_dir):
     harness's per-run c=sqrt(n) training, an n^1.5 term; VERDICT r11
     #6). Oracle replays sample-restricted training, full-corpus
     assign/encode, and the decimal ADC ranking bit-for-bit."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from yamr_spark.materialize import materialize
-    from yamr_spark.tmpdirs import session_dir, store_complete
-
     emb = table(spark, sf_dir, "embeddings")
     # frozen training artifacts shared per session (_frozen_shared):
     # deterministic byproducts of the persisted store — the timed
     # invocation measures the steady-state probe, per the docstring
     cents, assign = _frozen_shared(spark, sf_dir)
     books = _frozen_books_shared(spark, sf_dir)
-    store = os.path.join(
-        session_dir(f"ivfpqfz:{sf_dir}", "yamr_ivfpq_frozen_"), "store"
+    store = session_store(
+        f"ivfpqfz:{sf_dir}",
+        lambda p: S.write_ivf_pq_store(emb, p, assign=assign, books=books),
     )
-    if not store_complete(store):
-        S.write_ivf_pq_store(emb, store, assign=assign, books=books)
     return S.ivf_pq_store_topk(
         spark, store, emb, topk=5, n_queries=10, c=8, nprobe=2,
         cents=cents, books=books,
@@ -2451,24 +2419,16 @@ def q_ivf_pq_store_frozen_m16(spark, sf_dir):
     store roundtrip's exactness. Serving layout/plan are the m=4
     store's: codes partitioned by centroid_id, probed cells pushed as
     a literal partition filter, broadcast LUT, decimal ADC ranking."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from yamr_spark.materialize import materialize
-    from yamr_spark.tmpdirs import session_dir, store_complete
-
     emb = table(spark, sf_dir, "embeddings")
     # frozen training artifacts shared per session (_frozen_shared)
     cents, assign = _frozen_shared(spark, sf_dir)
     books = _frozen_books_shared(spark, sf_dir, m=16, k=64)
-    store = os.path.join(
-        session_dir(f"ivfpqfz16:{sf_dir}", "yamr_ivfpq_frozen16_"), "store"
+    store = session_store(
+        f"ivfpqfz16:{sf_dir}",
+        lambda p: S.write_ivf_pq_store(
+            emb, p, m=16, k=64, assign=assign, books=books
+        ),
     )
-    if not store_complete(store):
-        S.write_ivf_pq_store(
-            emb, store, m=16, k=64, assign=assign, books=books
-        )
     return S.ivf_pq_store_topk(
         spark, store, emb, topk=5, n_queries=10, c=8, nprobe=2, m=16, k=64,
         cents=cents, books=books,

@@ -383,31 +383,16 @@ def q_snapshot_time_travel(spark, sf_dir):
     keep-latest — any in-place mutation of shared bucket versions
     breaks the v1 hash. Immutable bucket versions + manifest pointers
     (operators/snapshots.py), the Iceberg/Delta core on plain parquet."""
-    import os
-
     from yamr_spark.operators.snapshots import (
         commit_merge,
         create_table,
         read_snapshot,
     )
-    from yamr_spark.tmpdirs import session_dir
+    from yamr_spark.tmpdirs import session_store
 
-    from yamr_spark.operators.snapshots import latest_version
-
-    base = session_dir(f"snap_table:{sf_dir}", "yamr_snap_")
-    t = os.path.join(base, "table")
-
-    def _built() -> bool:
-        # LATEST existing is not enough (a crash between the two
-        # commits leaves a half-built table that would silently serve a
-        # wrong v2 — the same trap as the r03 bare-directory _SUCCESS
-        # advice); require the final version number.
-        try:
-            return latest_version(t) == 2
-        except FileNotFoundError:
-            return False
-
-    if not _built():
+    def build(t):
+        # both commits before session_store's marker: a crash between
+        # them rebuilds instead of serving a half-built v2
         create_table(t)
         ev = table(spark, sf_dir, "events").select(
             "user_id", "event_id", "value", "ts"
@@ -420,6 +405,8 @@ def q_snapshot_time_travel(spark, sf_dir):
             ev.where(F.col("ts") >= "2024-01-16"),
             t, key="user_id", order="ts", tie="event_id",
         )
+
+    t = session_store(f"snap_table:{sf_dir}", build)
 
     def rollup(version):
         return (
@@ -434,6 +421,39 @@ def q_snapshot_time_travel(spark, sf_dir):
         )
 
     return rollup(1).unionAll(rollup(2))
+
+
+def _stream_service(spark, sf_dir, key, build_index, drain, read):
+    """The streaming dedup services' shared shape: even doc_ids seed the
+    standing index (``build_index``); odd docs are staged as two
+    micro-batch files (doc_id%4==1 then %4==3). Index and staged files
+    are one session store; ``drain`` is ALWAYS invoked against it, and
+    its results/checkpoint live under the store too, so a rebuild
+    after a crashed setup clears them. ``read`` serves the results."""
+    import os
+
+    from yamr_spark.streaming.lsh import stage_stream_files
+    from yamr_spark.tmpdirs import session_store
+
+    docs = table(spark, sf_dir, "documents")
+
+    def build(base):
+        build_index(
+            docs.where(F.col("doc_id") % 2 == 0), os.path.join(base, "index")
+        )
+        stage_stream_files(
+            docs,
+            os.path.join(base, "stream"),
+            [F.col("doc_id") % 4 == 1, F.col("doc_id") % 4 == 3],
+        )
+
+    base = session_store(f"{key}:{sf_dir}", build)
+    results = os.path.join(base, "results")
+    drain(
+        spark, os.path.join(base, "stream"), docs.schema,
+        os.path.join(base, "index"), results, os.path.join(base, "ckpt"),
+    )
+    return read(spark, results)
 
 
 @register(
@@ -454,41 +474,16 @@ def q_streaming_lsh_incremental(spark, sf_dir):
     drained, and resumes the remaining batches if a prior attempt in
     this session crashed mid-stream (ADVICE r05: a checkpoint-dir
     existence guard would silently return partial results there)."""
-    import os
-    import shutil
-
     from yamr_spark.streaming.lsh import (
         build_band_index,
         read_flagged,
-        stage_stream_files,
         stream_lsh_into_index,
     )
-    from yamr_spark.tmpdirs import session_dir
 
-    docs = table(spark, sf_dir, "documents")
-    base = session_dir(f"stream_lsh:{sf_dir}", "yamr_stream_lsh_")
-    index_dir = os.path.join(base, "index")
-    stream_dir = os.path.join(base, "stream")
-    results_dir = os.path.join(base, "results")
-    ckpt = os.path.join(base, "ckpt")
-    staged_ok = os.path.join(base, "_staged_ok")
-    if not os.path.exists(staged_ok):
-        # partial setup from a crashed prior attempt is not resumable —
-        # rebuild it (and the downstream state it seeded) from scratch
-        for d in (index_dir, stream_dir, results_dir, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
-        build_band_index(docs.where(F.col("doc_id") % 2 == 0), index_dir)
-        stage_stream_files(
-            docs,
-            stream_dir,
-            [F.col("doc_id") % 4 == 1, F.col("doc_id") % 4 == 3],
-        )
-        with open(staged_ok, "w"):
-            pass
-    stream_lsh_into_index(
-        spark, stream_dir, docs.schema, index_dir, results_dir, ckpt
+    return _stream_service(
+        spark, sf_dir, "stream_lsh",
+        build_band_index, stream_lsh_into_index, read_flagged,
     )
-    return read_flagged(spark, results_dir)
 
 
 from yamr_spark.queries_dedup import _BANDS_CTE as _LSH_BANDS_CTE  # noqa: E402
@@ -792,39 +787,16 @@ def q_streaming_minimized_index(spark, sf_dir):
     then its anchors join the index. Same setup-marker + always-drain
     discipline, batch_id self-exclusion, and compaction as the
     word-window service."""
-    import os
-    import shutil
-
-    from yamr_spark.streaming.lsh import stage_stream_files
     from yamr_spark.streaming.substring import (
         build_anchor_index,
         read_minimized_ledgers,
         stream_minimized_into_index,
     )
-    from yamr_spark.tmpdirs import session_dir
 
-    docs = table(spark, sf_dir, "documents")
-    base = session_dir(f"stream_minsub:{sf_dir}", "yamr_stream_minsub_")
-    index_dir = os.path.join(base, "index")
-    stream_dir = os.path.join(base, "stream")
-    results_dir = os.path.join(base, "results")
-    ckpt = os.path.join(base, "ckpt")
-    staged_ok = os.path.join(base, "_staged_ok")
-    if not os.path.exists(staged_ok):
-        for d in (index_dir, stream_dir, results_dir, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
-        build_anchor_index(docs.where(F.col("doc_id") % 2 == 0), index_dir)
-        stage_stream_files(
-            docs,
-            stream_dir,
-            [F.col("doc_id") % 4 == 1, F.col("doc_id") % 4 == 3],
-        )
-        with open(staged_ok, "w"):
-            pass
-    stream_minimized_into_index(
-        spark, stream_dir, docs.schema, index_dir, results_dir, ckpt
+    return _stream_service(
+        spark, sf_dir, "stream_minsub",
+        build_anchor_index, stream_minimized_into_index, read_minimized_ledgers,
     )
-    return read_minimized_ledgers(spark, results_dir)
 
 
 
@@ -892,36 +864,13 @@ def q_streaming_substring_index(spark, sf_dir):
     batch 2 matches batch 1's windows, the incremental property the
     oracle replays in closed form. Same setup-marker + always-drain
     discipline as the LSH stream."""
-    import os
-    import shutil
-
     from yamr_spark.streaming.substring import (
         build_window_index,
         read_ledgers,
         stream_substring_into_index,
     )
-    from yamr_spark.streaming.lsh import stage_stream_files
-    from yamr_spark.tmpdirs import session_dir
 
-    docs = table(spark, sf_dir, "documents")
-    base = session_dir(f"stream_substr:{sf_dir}", "yamr_stream_substr_")
-    index_dir = os.path.join(base, "index")
-    stream_dir = os.path.join(base, "stream")
-    results_dir = os.path.join(base, "results")
-    ckpt = os.path.join(base, "ckpt")
-    staged_ok = os.path.join(base, "_staged_ok")
-    if not os.path.exists(staged_ok):
-        for d in (index_dir, stream_dir, results_dir, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
-        build_window_index(docs.where(F.col("doc_id") % 2 == 0), index_dir)
-        stage_stream_files(
-            docs,
-            stream_dir,
-            [F.col("doc_id") % 4 == 1, F.col("doc_id") % 4 == 3],
-        )
-        with open(staged_ok, "w"):
-            pass
-    stream_substring_into_index(
-        spark, stream_dir, docs.schema, index_dir, results_dir, ckpt
+    return _stream_service(
+        spark, sf_dir, "stream_substr",
+        build_window_index, stream_substring_into_index, read_ledgers,
     )
-    return read_ledgers(spark, results_dir)

@@ -141,21 +141,23 @@ def read_binary_files(spark: SparkSession, path: str, glob: str | None = None) -
 def write_bucketed(
     df: DataFrame,
     table_name: str,
+    path: str,
     buckets: int,
     bucket_cols: list[str],
     sort_cols: list[str] | None = None,
 ) -> None:
-    """Bucketed managed table: rows hash-partitioned into ``buckets``
-    files per partition by ``bucket_cols`` at WRITE time. Two tables
-    bucketed the same way join WITHOUT an exchange — the shuffle is paid
-    once at ingest instead of per query, which is the whole game for a
-    fact table joined daily at 100 TB. ``sort_cols`` additionally
-    pre-sorts each bucket so sort-merge join skips its sort.
+    """Bucketed EXTERNAL table over files at ``path`` (the caller owns
+    it; nothing goes to the warehouse dir): rows hash-partitioned into
+    ``buckets`` files per partition by ``bucket_cols`` at WRITE time.
+    Two tables bucketed the same way join WITHOUT an exchange — the
+    shuffle is paid once at ingest instead of per query, which is the
+    whole game for a fact table joined daily at 100 TB. ``sort_cols``
+    additionally pre-sorts each bucket so sort-merge join skips its sort.
     (Pinned by tests/test_plans.py::test_bucketed_join_has_no_exchange.)"""
     w = df.write.mode("overwrite").bucketBy(buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table_name)
+    w.format("parquet").option("path", path).saveAsTable(table_name)
 
 
 def write_jsonl(df: DataFrame, path: str) -> None:

@@ -4,22 +4,28 @@ or sink (IVF partitioned store, streaming parquet sink + checkpoint).
 One directory per (process, key), removed at interpreter exit — repeated
 invocations of the same query (bench warmup + timed pass, driver
 correctness + replica) reuse the directory instead of leaking a fresh
-mkdtemp per call. Reuse is semantics-preserving for both users:
+mkdtemp per call. A streaming sink + checkpoint pair reuses its
+directory safely: it is exactly-once, so a re-invocation is a no-op batch.
 
-- the IVF store is immutable once written (the query skips the write when
-  the store already exists, so the timed pass measures the probe — the
-  store build is the one-time layout cost at 100 TB);
-- the streaming sink + checkpoint pair is exactly-once by construction,
-  so a re-invocation against the committed checkpoint is a no-op batch
-  and the sink contents are unchanged (that restart-idempotence is the
-  very property the query asserts).
+``session_store`` is the one way a query builds a store once per
+process. Its commit point is a marker written LAST, after the builder
+returns, so a builder may write in several jobs (overwrite then append,
+two snapshot commits, index plus staged stream files) — Spark's per-job
+``_SUCCESS`` would trust a half-built store. A store is immutable once
+built, so the timed pass measures the probe (the build is the one-time
+layout cost at 100 TB). The winnow fingerprint table is an external
+bucketed table over such a store, keyed by the applicationId because
+its in-memory catalog entry dies with the SparkContext; nothing is
+written to ``./spark-warehouse``.
 """
 
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
+from collections.abc import Callable
 
 _DIRS: dict[str, str] = {}
 
@@ -34,17 +40,16 @@ def session_dir(key: str, prefix: str = "yamr_tmp_") -> str:
     return _DIRS[key]
 
 
-def store_complete(path: str) -> bool:
-    """True iff a Spark-written store at ``path`` COMMITTED: the
-    ``_SUCCESS`` marker exists. A bare directory-existence check would
-    treat a partially-written store as complete (Spark creates the
-    output directory before the job commits), silently reading a corrupt
-    store after any failed first write. If the directory exists without
-    the marker, clear it so the caller's rewrite starts clean."""
-    import os
-
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return True
-    if os.path.exists(path):
-        shutil.rmtree(path, ignore_errors=True)
-    return False
+def session_store(key: str, build: Callable[[str], object]) -> str:
+    """Return ``<session_dir(key)>/store``, calling ``build(path)`` first
+    unless this process already built it (marker ``_BUILT`` present). A
+    build that raises leaves no marker; the next call clears the
+    partial store and builds again."""
+    d = session_dir(key)
+    store = os.path.join(d, "store")
+    marker = os.path.join(d, "_BUILT")
+    if not os.path.exists(marker):
+        shutil.rmtree(store, ignore_errors=True)
+        build(store)
+        open(marker, "w").close()
+    return store
