@@ -54,3 +54,46 @@ def job_count(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+class CommitCrash(Exception):
+    """Raised in place of one filesystem step of ``yamr_spark.dircommit``."""
+
+
+@pytest.fixture
+def crash_commit(monkeypatch):
+    """``with crash_commit(k) as steps:`` makes the k-th ``os.rename``,
+    ``os.replace`` or ``shutil.rmtree`` that ``yamr_spark.dircommit``
+    runs raise ``crash_commit.Crash`` instead of running (``k=None``
+    crashes nothing). ``steps`` lists every step attempted, with its
+    arguments."""
+    import contextlib
+    import shutil
+    import types
+
+    from yamr_spark import dircommit
+
+    @contextlib.contextmanager
+    def arm(k: int | None):
+        steps: list[tuple] = []
+
+        def step(fn):
+            def wrapped(*args, **kwargs):
+                steps.append((fn.__name__, *args))
+                if len(steps) == k:
+                    raise CommitCrash(f"step {k}: {steps[-1]}")
+                return fn(*args, **kwargs)
+
+            return wrapped
+
+        fake_os = types.SimpleNamespace(**vars(os))
+        fake_os.rename, fake_os.replace = step(os.rename), step(os.replace)
+        fake_shutil = types.SimpleNamespace(**vars(shutil))
+        fake_shutil.rmtree = step(shutil.rmtree)
+        with monkeypatch.context() as m:
+            m.setattr(dircommit, "os", fake_os)
+            m.setattr(dircommit, "shutil", fake_shutil)
+            yield steps
+
+    arm.Crash = CommitCrash
+    return arm

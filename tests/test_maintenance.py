@@ -79,51 +79,6 @@ def test_concurrent_compaction_equals_sequential(spark, sf_dir, tmp_path):
     assert by_rel(p1, seq_store) == by_rel(p2, con_store)
 
 
-def test_crash_residue_recovery(spark, sf_dir, tmp_path):
-    """A crash at any point of the swap leaves only underscore-hidden
-    residue; compaction_plan sweeps it (restoring the between-renames
-    backup) and a plain read never sees duplicated or bogus rows."""
-    import shutil
-
-    from yamr_spark.operators.maintenance import (
-        _leaf_parquet_dirs,
-        _stage_name,
-        _sweep_residue,
-    )
-
-    store = str(tmp_path / "store")
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    docs.repartition(6).write.partitionBy("lang").parquet(store)
-    truth = sorted(r.doc_id for r in spark.read.parquet(store).collect())
-    leaves = _leaf_parquet_dirs(store)
-    assert leaves
-
-    # crash A: tmp written, swap never started
-    l0 = leaves[0]
-    parent, base = os.path.split(l0)
-    tmp = os.path.join(parent, _stage_name(base, ".compact.tmp"))
-    shutil.copytree(l0, tmp)
-    # crash B: old renamed aside, new rename never happened (leaf missing)
-    l1 = leaves[1]
-    parent1, base1 = os.path.split(l1)
-    old = os.path.join(parent1, _stage_name(base1, ".compact.old"))
-    os.rename(l1, old)
-
-    # Spark partition discovery ignores the residue even BEFORE sweep
-    # (underscore prefix) — no bogus partitions, no duplicate rows; the
-    # between-renames leaf is invisible until restored.
-    seen = sorted(r.doc_id for r in spark.read.parquet(store).collect())
-    assert set(seen) <= set(truth) and len(seen) == len(set(seen))
-
-    plan = compaction_plan(store, target_bytes=64 * 1024 * 1024)
-    assert not os.path.exists(tmp) and not os.path.exists(old)
-    assert os.path.exists(l1)  # backup restored
-    assert sorted(r.doc_id for r in spark.read.parquet(store).collect()) == truth
-    # planner never lists underscore dirs as leaves
-    assert all("/_" not in e["dir"].replace(store, "") for e in plan)
-    assert _sweep_residue(store) == []
-
-
 def test_flat_store_compaction_stages_inside_store(spark, sf_dir, tmp_path):
     """ADVICE r06 (medium): compacting a FLAT store (the leaf IS
     store_dir) must stage its residue INSIDE the store — the old
@@ -142,119 +97,3 @@ def test_flat_store_compaction_stages_inside_store(spark, sf_dir, tmp_path):
     # nothing staged OUTSIDE the store, no residue left inside
     assert not [d for d in os.listdir(tmp_path) if d.startswith("_")]
     assert not [d for d in os.listdir(store) if d.startswith("_") and d != "_SUCCESS"]
-
-
-def test_flat_store_crash_windows_recover(spark, sf_dir, tmp_path):
-    """Every crash window of the flat-leaf protocol recovers to a
-    committed state via sweep_residue: partial rewrite → rolled back;
-    mid-drain → rolled back; post-drain (including the empty-root
-    'index looks absent' window the streaming LSH ingest hits) →
-    rolled forward. Content is never lost or duplicated."""
-    import shutil
-
-    from yamr_spark.operators.maintenance import (
-        _FLAT_DRAINED,
-        _FLAT_OLD,
-        _FLAT_TMP,
-        sweep_residue,
-    )
-
-    def fresh(name):
-        store = str(tmp_path / name)
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.repartition(6).write.parquet(store)
-        return store, sorted(r.doc_id for r in spark.read.parquet(store).collect())
-
-    # W1: rewrite staged, drain never started → tmp dropped, originals win
-    store, truth = fresh("w1")
-    tmp = os.path.join(store, _FLAT_TMP)
-    spark.read.parquet(store).coalesce(1).write.parquet(tmp)
-    assert any(a.startswith("removed partial flat rewrite") for a in sweep_residue(store))
-    assert sorted(r.doc_id for r in spark.read.parquet(store).collect()) == truth
-    assert not os.path.exists(tmp)
-
-    # W2: crash mid-drain (half the originals moved aside, no _DRAINED)
-    # → rolled back, every original restored
-    store, truth = fresh("w2")
-    tmp = os.path.join(store, _FLAT_TMP)
-    old = os.path.join(store, _FLAT_OLD)
-    spark.read.parquet(store).coalesce(1).write.parquet(tmp)
-    os.makedirs(old)
-    moved = [f for f in sorted(os.listdir(store)) if f.endswith(".parquet")][:3]
-    for f in moved:
-        os.rename(os.path.join(store, f), os.path.join(old, f))
-    assert any(a.startswith("rolled back") for a in sweep_residue(store))
-    assert sorted(r.doc_id for r in spark.read.parquet(store).collect()) == truth
-    assert not os.path.exists(old) and not os.path.exists(tmp)
-
-    # W3: crash AFTER the drain completed (root empty of parquet — the
-    # exact window where the old code made the index look absent) →
-    # rolled forward to the compacted file set
-    store, truth = fresh("w3")
-    tmp = os.path.join(store, _FLAT_TMP)
-    old = os.path.join(store, _FLAT_OLD)
-    spark.read.parquet(store).coalesce(1).write.parquet(tmp)
-    os.makedirs(old)
-    for f in sorted(os.listdir(store)):
-        if f.endswith(".parquet"):
-            os.rename(os.path.join(store, f), os.path.join(old, f))
-    with open(os.path.join(old, _FLAT_DRAINED), "w"):
-        pass
-    # the pre-sweep read sees NO data — this is why ingest must sweep first
-    assert any(a.startswith("rolled forward") for a in sweep_residue(store))
-    assert sorted(r.doc_id for r in spark.read.parquet(store).collect()) == truth
-    assert len(_parquet_files(store)) == 1  # the compacted rewrite won
-    assert not os.path.exists(old) and not os.path.exists(tmp)
-
-    # W4: crash between refill and cleanup (tmp+old both gone-stale):
-    # run the real path but fail the first rmtree
-    store, truth = fresh("w4")
-    from yamr_spark.operators import maintenance as M
-
-    real_rmtree = shutil.rmtree
-    calls = {"n": 0}
-
-    def failing_rmtree(path, *a, **kw):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise OSError("simulated crash during cleanup")
-        return real_rmtree(path, *a, **kw)
-
-    M.shutil.rmtree = failing_rmtree
-    try:
-        try:
-            compact_store(spark, store, target_bytes=256 * 1024 * 1024)
-        except OSError:
-            pass
-    finally:
-        M.shutil.rmtree = real_rmtree
-    sweep_residue(store)
-    assert sorted(r.doc_id for r in spark.read.parquet(store).collect()) == truth
-    assert not os.path.exists(os.path.join(store, _FLAT_OLD))
-    assert not os.path.exists(os.path.join(store, _FLAT_TMP))
-
-
-def test_nested_leaf_named_flat_not_misread_as_flat_residue(spark, sf_dir, tmp_path):
-    """Regression (r07 review): a nested partition leaf literally named
-    'flat' stages as '_flat.compact.old' under the nested dir-rename
-    protocol — the flat-store staging names are deliberately unreachable
-    by _stage_name, so the sweep must RENAME the backup dir back (nested
-    rule), never file-merge it into the store root (flat rule)."""
-    from yamr_spark.operators.maintenance import _stage_name, sweep_residue
-
-    store = str(tmp_path / "store")
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.limit(50).write.parquet(os.path.join(store, "flat"))
-    docs.limit(30).write.parquet(os.path.join(store, "other"))
-    truth = sorted(
-        r.doc_id for r in spark.read.parquet(os.path.join(store, "flat")).collect()
-    )
-    # crash between the two nested swap renames: leaf renamed aside
-    leaf = os.path.join(store, "flat")
-    os.rename(leaf, os.path.join(store, _stage_name("flat", ".compact.old")))
-    actions = sweep_residue(store)
-    assert any(a.startswith("restored") for a in actions), actions
-    assert os.path.isdir(leaf)
-    assert sorted(r.doc_id for r in spark.read.parquet(leaf).collect()) == truth
-    # nothing leaked into the store root
-    assert not [f for f in os.listdir(store) if f.endswith(".parquet")]

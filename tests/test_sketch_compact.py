@@ -1,27 +1,21 @@
 """Prefix compaction of the per-batch sketch delta stores: served
 results must be IDENTICAL before and after folding a committed prefix,
-and every crash window of the stage->marker->delete->move protocol
-must recover to that same served result (the LSH mid-crash test's
-frame applied to the CMS/KMV stores)."""
+and a fold that crashes before, during or after its commit recovers
+to that same served result."""
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from yamr_spark import dircommit
 from yamr_spark.streaming.cms import read_cms_store, stream_cms_to_store
 from yamr_spark.streaming.events import stream_events
 from yamr_spark.streaming.kmv import read_kmv_store, stream_kmv_to_store
-from yamr_spark.streaming.sketch_compact import (
-    cms_merge,
-    compact_prefix,
-    kmv_merge,
-    recover,
-)
+from yamr_spark.streaming.sketch_compact import cms_merge, compact_prefix, kmv_merge
 
 
 def _batch_ids(store):
@@ -89,42 +83,46 @@ def test_kmv_compact_preserves_served_sketch(spark, sf_dir, tmp_path):
     assert read_kmv_store(spark, store, k=32).collect() == before
 
 
-def test_crash_before_marker_drops_stage(spark, cms_store):
+def test_crash_before_marker_drops_stage(spark, cms_store, crash_commit):
+    """A fold that crashes before its intent is written leaves the store
+    as it was; the next fold drops the uncommitted stage."""
     before = _served_cms(spark, cms_store)
-    # simulate: staged write completed, crash before the marker commit
-    stage = os.path.join(cms_store, "_compact_stage")
-    cms_merge(spark.read.parquet(*[
-        os.path.join(cms_store, f"batch_id={b}") for b in (0, 1)
-    ])).coalesce(1).write.mode("overwrite").parquet(stage)
-    assert recover(cms_store) == "dropped uncommitted stage"
-    assert not os.path.isdir(stage)
+    with crash_commit(1), pytest.raises(crash_commit.Crash):
+        compact_prefix(spark, cms_store, cms_merge, upto=1)
+    assert os.path.isdir(os.path.join(cms_store, dircommit.STAGING))
+    assert _served_cms(spark, cms_store) == before
     assert _batch_ids(cms_store) == [0, 1, 2]
+    assert compact_prefix(spark, cms_store, cms_merge, upto=1) == 2
+    assert not os.path.exists(os.path.join(cms_store, dircommit.STAGING))
     assert _served_cms(spark, cms_store) == before
 
 
-def test_crash_after_marker_mid_delete_completes(spark, cms_store):
+def test_crash_after_marker_mid_delete_completes(spark, cms_store, crash_commit):
+    """A fold that crashes after its intent, with one of two folded
+    partitions deleted, is completed by the read path's recovery."""
     before = _served_cms(spark, cms_store)
-    stage = os.path.join(cms_store, "_compact_stage")
-    cms_merge(spark.read.parquet(*[
-        os.path.join(cms_store, f"batch_id={b}") for b in (0, 1)
-    ])).coalesce(1).write.mode("overwrite").parquet(stage)
-    with open(os.path.join(cms_store, "_compact_commit.json"), "w") as fh:
-        json.dump({"delete": ["batch_id=0", "batch_id=1"], "target": "batch_id=0"}, fh)
-    # crash mid-delete: only one folded partition removed so far
-    shutil.rmtree(os.path.join(cms_store, "batch_id=1"))
-    # the read path runs recovery itself
-    assert _served_cms(spark, cms_store) == before
+    # steps: 1 intent, 2 delete batch_id=1, 3 delete batch_id=2
+    with crash_commit(3) as steps, pytest.raises(crash_commit.Crash):
+        compact_prefix(spark, cms_store, cms_merge, upto=2, stream_stopped=True)
+    assert steps[2][1] == os.path.join(cms_store, "batch_id=2")
     assert _batch_ids(cms_store) == [0, 2]
+    assert _served_cms(spark, cms_store) == before
+    assert _batch_ids(cms_store) == [0]
 
 
-def test_crash_after_move_marker_left(spark, cms_store):
+def test_crash_after_move_marker_left(spark, cms_store, crash_commit):
+    """A replay of an intent whose move already completed keeps the
+    merged partition: the fold replaces its target, never deletes it."""
     before = _served_cms(spark, cms_store)
-    compact_prefix(spark, cms_store, cms_merge, upto=1)
-    # simulate a crash that completed everything except marker removal
-    with open(os.path.join(cms_store, "_compact_commit.json"), "w") as fh:
-        json.dump({"delete": ["batch_id=0", "batch_id=1"], "target": "batch_id=0"}, fh)
-    assert recover(cms_store) == "completed interrupted compaction"
-    assert not os.path.exists(os.path.join(cms_store, "_compact_commit.json"))
+    # steps: 1 intent, 2 delete batch_id=1, 3 old batch_id=0 to the
+    # trash, 4 move the stage onto batch_id=0, 5 drop the trash
+    with crash_commit(5) as steps, pytest.raises(crash_commit.Crash):
+        compact_prefix(spark, cms_store, cms_merge, upto=1)
+    assert steps[3][2] == os.path.join(cms_store, "batch_id=0")
+    assert os.listdir(os.path.join(cms_store, "_commits"))
+    dircommit.recover(cms_store)
+    assert not os.path.exists(os.path.join(cms_store, "_commits"))
+    assert _batch_ids(cms_store) == [0, 2]
     assert _served_cms(spark, cms_store) == before
 
 
@@ -153,68 +151,3 @@ def test_compact_stream_stopped_folds_newest(spark, cms_store):
     assert folded == 3
     assert _batch_ids(cms_store) == [0]
     assert _served_cms(spark, cms_store) == before
-
-
-def test_substring_store_crash_windows_with_hb_layout(spark, sf_dir, tmp_path):
-    """The crash protocol over the hb-PARTITIONED substring store (r14:
-    the staged dir now contains hb= subdirectories and moves into place
-    with the same single rename): a crash after the marker with a
-    partial delete recovers to the identical served match set, and the
-    recovered merged partition keeps the bucket layout."""
-    from yamr_spark.streaming.substring import (
-        _window_table,
-        build_window_index,
-        compact_window_index,
-        probe_matched_keys,
-        substring_merge,
-    )
-    from yamr_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents")
-    store = os.path.join(str(tmp_path), "index")
-    build_window_index(docs.where(F.col("doc_id") % 4 == 0), store)
-    # two more committed batches, overlapping windows across partitions
-    from yamr_spark.streaming.substring import _write_index_partition
-
-    _write_index_partition(
-        _window_table(docs.where(F.col("doc_id") % 4 == 2)), store, 0
-    )
-    _write_index_partition(
-        _window_table(docs.where(F.col("doc_id") % 2 == 0)), store, 1
-    )
-    batch = _window_table(docs.where(F.col("doc_id") % 2 == 1))
-
-    def served():
-        return sorted(
-            (r.h, r.wt)
-            for r in probe_matched_keys(spark, store, 99, batch).collect()
-        )
-
-    before = served()
-    assert before
-    # simulate: hb-partitioned stage written + marker committed + one
-    # folded partition already deleted, then crash
-    stage = os.path.join(store, "_compact_stage")
-    merged = substring_merge(
-        spark.read.option("basePath", store).parquet(
-            os.path.join(store, "batch_id=-1"), os.path.join(store, "batch_id=0")
-        )
-    )
-    merged.repartition("hb").write.mode("overwrite").partitionBy("hb").parquet(
-        stage
-    )
-    with open(os.path.join(store, "_compact_commit.json"), "w") as fh:
-        json.dump(
-            {"delete": ["batch_id=-1", "batch_id=0"], "target": "batch_id=-1"},
-            fh,
-        )
-    shutil.rmtree(os.path.join(store, "batch_id=0"))
-    assert recover(store) == "completed interrupted compaction"
-    assert _batch_ids(store) == [-1, 1]
-    merged_dir = os.path.join(store, "batch_id=-1")
-    assert any(d.startswith("hb=") for d in os.listdir(merged_dir))
-    assert served() == before
-    # and the normal clean-stop fold still serves identically
-    compact_window_index(spark, store, upto=10**9, stream_stopped=True)
-    assert _batch_ids(store) == [-1]
-    assert served() == before

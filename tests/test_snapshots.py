@@ -174,7 +174,7 @@ def test_staging_residue_invisible_swept_and_expiry_safe(spark, tmp_path):
     swept by the next commit."""
     import shutil
 
-    from yamr_spark.streaming.upsert import _STAGING
+    from yamr_spark.dircommit import STAGING
 
     table = str(tmp_path / "t")
     create_table(table)
@@ -183,7 +183,7 @@ def test_staging_residue_invisible_swept_and_expiry_safe(spark, tmp_path):
     commit_merge(_batch(spark, rows), table, **keys)
     truth = {(r.user_id, r.event_id) for r in read_snapshot(spark, table).collect()}
     bucket, v = sorted(read_manifest(table)["buckets"].items())[0]
-    stage = os.path.join(table, _STAGING)
+    stage = os.path.join(table, STAGING)
     shutil.copytree(
         os.path.join(table, "buckets", f"bucket={bucket}", f"v={v}"),
         os.path.join(stage, f"__bucket={bucket}"),

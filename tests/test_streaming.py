@@ -293,68 +293,6 @@ def test_dpo_merge_equals_per_bucket_loop(spark, tmp_path):
             assert now == mt, f"{d} rewritten by a merge that never touched it"
 
 
-def test_upsert_crash_residue_invisible_and_recovered(spark, tmp_path):
-    """Staging residue from a crashed merge is invisible to read_store
-    (no duplicated keys), and a re-merge restores a bucket stranded
-    between the two swap renames instead of dropping its rows."""
-    import os
-    import shutil
-    from datetime import datetime
-
-    from yamr_spark.streaming.upsert import merge_batch_into_store, read_store
-
-    schema = "user_id long, event_id long, event_type string, value double, ts timestamp"
-    b1 = spark.createDataFrame(
-        [
-            (1, 10, "click", 1.0, datetime(2024, 1, 1, 0, 0)),
-            (2, 11, "view", 2.0, datetime(2024, 1, 1, 0, 1)),
-            (3, 12, "view", 3.0, datetime(2024, 1, 1, 0, 2)),
-        ],
-        schema,
-    )
-    store = str(tmp_path / "store")
-    merge_batch_into_store(b1, store, key="user_id", order="ts", tie="event_id")
-    buckets = sorted(d for d in os.listdir(store) if d.startswith("bucket="))
-    assert buckets
-    truth = {(r.user_id, r.event_id) for r in read_store(spark, store).collect()}
-
-    # crash A: a committed-looking tmp next to a live bucket (the old
-    # pre-fix layout 'bucket=K.tmp' read as a bucket; the new layout
-    # must not)
-    b0 = buckets[0]
-    n0 = b0.split("=")[1]
-    tmp = os.path.join(store, f"_bucket_{n0}.tmp")
-    shutil.copytree(os.path.join(store, b0), tmp)
-    assert {
-        (r.user_id, r.event_id) for r in read_store(spark, store).collect()
-    } == truth  # no duplicated keys from residue
-
-    # crash B: bucket renamed aside, new rename never happened
-    b_last = buckets[-1]
-    n_last = b_last.split("=")[1]
-    os.rename(
-        os.path.join(store, b_last), os.path.join(store, f"_bucket_{n_last}.old")
-    )
-    # re-merge an empty-for-that-bucket batch targeting bucket n_last:
-    # recovery must restore the stranded rows
-    b2 = spark.createDataFrame([(1, 99, "click", 5.0, datetime(2024, 1, 2))], schema)
-    merge_batch_into_store(b2, store, key="user_id", order="ts", tie="event_id")
-    # force recovery of every touched bucket by merging the full keyset
-    b3 = spark.createDataFrame(
-        [
-            (1, 100, "click", 6.0, datetime(2024, 1, 3)),
-            (2, 101, "view", 7.0, datetime(2024, 1, 3)),
-            (3, 102, "view", 8.0, datetime(2024, 1, 3)),
-        ],
-        schema,
-    )
-    merge_batch_into_store(b3, store, key="user_id", order="ts", tie="event_id")
-    got = {(r.user_id, r.event_id) for r in read_store(spark, store).collect()}
-    assert got == {(1, 100), (2, 101), (3, 102)}
-    # all residue swept by the merges that touched those buckets
-    assert not any(d.endswith((".tmp", ".old")) for d in os.listdir(store))
-
-
 def test_streaming_lsh_incremental_and_restart(spark, sf_dir, tmp_path):
     """The LSH ingestion service matches each batch against strictly
     earlier state (batch 2 must be able to match batch 1's docs — the
@@ -445,37 +383,27 @@ def test_streaming_lsh_compaction_preserves_flags(spark, sf_dir, tmp_path):
     assert outs["compact_files"] < outs["nocompact_files"]
 
 
-def test_read_store_restores_stranded_bucket_directly(spark, tmp_path):
-    """A bucket stranded as _bucket_<b>.old by a crash between the two
-    swap renames must be visible to a DIRECT read_store — no merge in
-    between (ADVICE r05: the per-touched-bucket-only recovery silently
-    under-reported here)."""
+def test_read_store_restores_stranded_bucket_directly(spark, tmp_path, crash_commit):
+    """A merge that crashes after its intent, with a bucket moved to the
+    trash and its replacement not yet moved in, reads in full through a
+    DIRECT ``read_store`` — no merge in between."""
     import os
-    from datetime import datetime
 
     from yamr_spark.streaming.upsert import merge_batch_into_store, read_store
 
-    schema = "user_id long, event_id long, event_type string, value double, ts timestamp"
-    b1 = spark.createDataFrame(
-        [
-            (1, 10, "click", 1.0, datetime(2024, 1, 1)),
-            (2, 11, "view", 2.0, datetime(2024, 1, 1)),
-            (3, 12, "view", 3.0, datetime(2024, 1, 1)),
-        ],
-        schema,
-    )
     store = str(tmp_path / "store")
-    merge_batch_into_store(b1, store, key="user_id", order="ts", tie="event_id")
-    truth = {(r.user_id, r.event_id) for r in read_store(spark, store).collect()}
-    # strand EVERY bucket mid-swap
-    for d in list(os.listdir(store)):
-        if d.startswith("bucket="):
-            n = d.split("=")[1]
-            os.rename(os.path.join(store, d), os.path.join(store, f"_bucket_{n}.old"))
-    assert {
-        (r.user_id, r.event_id) for r in read_store(spark, store).collect()
-    } == truth
-    assert not any(d.endswith(".old") for d in os.listdir(store))
+    keys = dict(key="user_id", order="ts", tie="event_id")
+    merge_batch_into_store(_store_rows(spark, range(8), day=1), store, **keys)
+    # steps: 1 intent, 2 first touched bucket to the trash, 3 its move
+    with crash_commit(3) as steps, pytest.raises(crash_commit.Crash):
+        merge_batch_into_store(_store_rows(spark, range(8), day=2), store, **keys)
+    stranded = steps[1][1]
+    assert os.path.basename(stranded).startswith("bucket=")
+    assert not os.path.exists(stranded)
+    got = {(r.user_id, r.event_id) for r in read_store(spark, store).collect()}
+    assert got == {(k, 2000 + k) for k in range(8)}
+    assert os.path.isdir(stranded)
+    assert not {"_commits", "_trash"} & set(os.listdir(store))
 
 
 def test_cdc_tombstone_delete_survives_late_update(spark, tmp_path):
@@ -519,21 +447,22 @@ def test_cdc_tombstone_delete_survives_late_update(spark, tmp_path):
     assert (1, True) in raw
 
 
-def test_streaming_lsh_recovers_index_after_compaction_crash(spark, sf_dir, tmp_path):
-    """The ADVICE r06 kill chain, end-to-end: a crash in the middle of
-    index compaction (post-drain — the window where the index dir holds
-    ZERO visible parquet files), then a restart that ingests one more
-    batch. The ingest-start sweep must RESTORE the compacted index
-    before matching, so the new batch's flags still see every pre-crash
-    doc — instead of silently matching nothing against a recreated
-    empty index and letting a later sweep delete the stranded backup."""
+def test_streaming_lsh_recovers_index_after_compaction_crash(
+    spark, sf_dir, tmp_path, crash_commit
+):
+    """The kill chain, end-to-end: index compaction crashes after its
+    commit point, with every old file in the trash and no compacted
+    file moved in yet, so the index dir holds ZERO visible parquet
+    files. A restart that ingests one more batch must recover the index
+    before matching, so the new batch's flags still see every
+    pre-crash doc."""
     import os
 
     from pyspark.sql import functions as F
 
-    from yamr_spark.operators.maintenance import _FLAT_DRAINED, _FLAT_OLD, _FLAT_TMP
+    from yamr_spark.operators.dedup import minhash_band_table, minhash_signatures
+    from yamr_spark.operators.maintenance import compact_store
     from yamr_spark.streaming.lsh import (
-        build_band_index,
         read_flagged,
         stage_stream_files,
         stream_lsh_into_index,
@@ -543,22 +472,17 @@ def test_streaming_lsh_recovers_index_after_compaction_crash(spark, sf_dir, tmp_
     docs = table(spark, sf_dir, "documents")
     index_dir = str(tmp_path / "index")
     results_dir = str(tmp_path / "results")
-    build_band_index(docs.where(F.col("doc_id") % 2 == 0), index_dir)
+    # the index as build_band_index writes it, in several files
+    evens = docs.where(F.col("doc_id") % 2 == 0)
+    minhash_band_table(minhash_signatures(evens)).repartition(4).write.parquet(index_dir)
     index_rows = spark.read.parquet(index_dir).count()
+    n_old = len([f for f in os.listdir(index_dir) if f.endswith(".parquet")])
+    assert n_old > 1
 
-    # simulate the post-drain crash window of a flat-store compaction:
-    # rewrite staged in _compact.flat.tmp, every visible file drained
-    # into _compact.flat.old (with the _DRAINED marker), nothing
-    # refilled yet — a naive reader sees an EMPTY index
-    tmp = os.path.join(index_dir, _FLAT_TMP)
-    old = os.path.join(index_dir, _FLAT_OLD)
-    spark.read.parquet(index_dir).coalesce(1).write.parquet(tmp)
-    os.makedirs(old)
-    for f in sorted(os.listdir(index_dir)):
-        if f.endswith(".parquet"):
-            os.rename(os.path.join(index_dir, f), os.path.join(old, f))
-    with open(os.path.join(old, _FLAT_DRAINED), "w"):
-        pass
+    # steps: 1 intent, 2..n_old+1 old files to the trash, then the
+    # first move of a compacted file
+    with crash_commit(n_old + 2), pytest.raises(crash_commit.Crash):
+        compact_store(spark, index_dir)
     assert not [f for f in os.listdir(index_dir) if f.endswith(".parquet")]
 
     # restart: ingest one batch of odd docs against the crashed index
@@ -573,9 +497,9 @@ def test_streaming_lsh_recovers_index_after_compaction_crash(spark, sf_dir, tmp_
     }
     # flags against the RECOVERED pre-crash index (even doc_ids) exist
     assert any(i % 2 == 0 for _s, i in flagged), flagged
-    # index = recovered pre-crash rows + the new batch's bands; residue gone
+    # index = recovered pre-crash rows + the new batch's bands
     assert spark.read.parquet(index_dir).count() > index_rows
-    assert not os.path.exists(old) and not os.path.exists(tmp)
+    assert not {"_commits", "_trash"} & set(os.listdir(index_dir))
 
 
 def test_streaming_substring_incremental_and_restart(spark, sf_dir, tmp_path):
@@ -989,8 +913,7 @@ def _every_and_one_bucket(spark, n_buckets=8):
 
 def test_read_store_reads_dpo_store(spark, tmp_path):
     """``read_store`` reads a store written by
-    ``merge_batch_into_store_dpo`` (every committed bucket carries the
-    ``_SUCCESS`` marker read_store checks)."""
+    ``merge_batch_into_store_dpo``."""
     from yamr_spark.streaming.upsert import (
         keep_latest,
         merge_batch_into_store_dpo,
@@ -1034,29 +957,29 @@ def test_merge_jobs_do_not_grow_with_touched_buckets(spark, tmp_path, job_count,
     }
 
 
-def test_staging_residue_invisible_and_swept(spark, tmp_path):
-    """A staging dir left by a crash between the staged write and the
-    bucket renames is invisible to ``read_store`` and to a plain scan
-    of the store root, and the next merge sweeps it."""
+def test_staging_residue_invisible_and_swept(spark, tmp_path, crash_commit):
+    """A merge that crashes before its intent is written leaves a staging
+    dir that is invisible to ``read_store`` and to a plain scan of the
+    store root, and the next merge drops it."""
     import os
-    import shutil
 
-    from yamr_spark.streaming.upsert import _STAGING, merge_batch_into_store, read_store
+    from yamr_spark import dircommit
+    from yamr_spark.streaming.upsert import merge_batch_into_store, read_store
 
     store = str(tmp_path / "store")
     keys = dict(key="user_id", order="ts", tie="event_id")
     merge_batch_into_store(_store_rows(spark, range(8), day=1), store, **keys)
     truth = {(r.user_id, r.event_id) for r in read_store(spark, store).collect()}
-    bucket = sorted(d for d in os.listdir(store) if d.startswith("bucket="))[0]
-    stage = os.path.join(store, _STAGING)
-    shutil.copytree(
-        os.path.join(store, bucket), os.path.join(stage, "__" + bucket)
-    )
+    with crash_commit(1), pytest.raises(crash_commit.Crash):
+        merge_batch_into_store(_store_rows(spark, range(8), day=3), store, **keys)
+    stage = os.path.join(store, dircommit.STAGING)
+    assert any(d.startswith("__bucket=") for d in os.listdir(stage))
 
     assert {(r.user_id, r.event_id) for r in read_store(spark, store).collect()} == truth
     assert spark.read.parquet(store).count() == len(truth)
 
     merge_batch_into_store(_store_rows(spark, [0], day=2), store, **keys)
     assert not os.path.exists(stage)
+    assert not {"_commits", "_trash"} & set(os.listdir(store))
     got = {(r.user_id, r.event_id) for r in read_store(spark, store).collect()}
     assert got == (truth - {(0, 1000)}) | {(0, 2000)}

@@ -14,18 +14,20 @@ Design:
   compacts incrementally — a crashed run leaves every completed
   directory valid, and re-running skips directories already within
   budget.
-- **Atomic swap with invisible staging**: rewrite to
-  ``_<dir>.compact.tmp`` (the underscore prefix makes Spark's
-  FileIndex — and this module's planner — ignore it), rename the
-  original aside to ``_<dir>.compact.old``, rename the rewrite into
-  place, drop the backup. Readers see the old or the new file set,
-  never a mix, and a crash at ANY step leaves only underscore-hidden
-  residue that ``compaction_plan`` sweeps (restoring the backup when
-  the crash landed between the two renames).
+- **One crash protocol** (``yamr_spark.dircommit``): each leaf's
+  rewrite is staged under the store's ``_staging/<id>`` and committed
+  with one intent. A nested leaf's stage replaces the leaf directory;
+  a flat store (the leaf IS the store root) deletes its old root
+  ``.parquet`` files and moves the staged files up. Planning calls
+  ``dircommit.recover`` first, so a crash at any step reads as the
+  leaf before or after its rewrite, and nothing is staged outside the
+  store. Flat-store compaction is a single-writer maintenance window:
+  a reader that lists the root during the commit's renames can see a
+  partial file set.
 - **Planning from metadata only**: file sizes come from a directory
   listing; no data is read to decide whether/how much to compact.
   (Local implementation walks the filesystem; on a cluster the same
-  listing comes from the Hadoop FileSystem API — the plan/rewrite/swap
+  listing comes from the Hadoop FileSystem API — the plan/rewrite/commit
   structure is unchanged. The per-leaf loop is sequential on the
   driver; with many thousands of undersized leaves, submit the
   rewrites through a thread pool — Spark schedules concurrent jobs
@@ -37,30 +39,18 @@ from __future__ import annotations
 import math
 import os
 import shutil
+import uuid
 
 from pyspark.sql import SparkSession
 
-
-def _stage_name(base: str, suffix: str) -> str:
-    """Staging/backup dir name for leaf ``base``: underscore-prefixed so
-    Spark's FileIndex ignores it — with ``=`` percent-encoded, because
-    Spark's filter (HadoopFsUtils.shouldFilterOutPathName) exempts
-    underscore names CONTAINING '=' (it must keep partition dirs), so
-    a literal ``_lang=en.compact.old`` would be partition-parsed as a
-    conflicting ``_lang`` column."""
-    return "_" + base.replace("=", "%3D") + suffix
-
-
-def _unstage_name(name: str, suffix: str) -> str:
-    return name[1 : -len(suffix)].replace("%3D", "=")
+from yamr_spark import dircommit
 
 
 def _leaf_parquet_dirs(store_dir: str) -> list[str]:
     """Leaf directories holding parquet files (a flat store is its own
-    single leaf). Any path component with a leading underscore is
-    staging/backup residue (``_<leaf>.compact.tmp`` / ``.compact.old``)
-    — skipped here exactly as Spark's FileIndex skips it, so a crashed
-    compaction can neither be re-compacted nor partition-discovered."""
+    single leaf). Any path component with a leading underscore
+    (``dircommit``'s ``_staging``, ``_trash``, ``_commits``) is skipped
+    here exactly as Spark's FileIndex skips it."""
     leaves = []
     for root, _dirs, files in os.walk(store_dir):
         rel = os.path.relpath(root, store_dir)
@@ -71,116 +61,8 @@ def _leaf_parquet_dirs(store_dir: str) -> list[str]:
     return sorted(leaves)
 
 
-# Staging names for compacting a FLAT store (the leaf IS store_dir):
-# the dir-rename swap used for nested leaves would stage in store_dir's
-# PARENT — outside every sweep's os.walk, so a crash mid-swap stranded
-# the whole index invisibly (ADVICE r06). Flat leaves instead stage
-# INSIDE the store under these fixed underscore names, with a
-# _DRAINED marker making every crash window unambiguous.
-# The names are UNREACHABLE by _stage_name: its output is always
-# "_<base>.compact.tmp|old" whose pre-suffix part ends in base's last
-# char, so producing "_compact.flat.tmp" would need a base of
-# "compact.flat.tmp"-minus-".compact.tmp" — length arithmetic that has
-# no solution. A nested leaf literally named "flat" therefore stages
-# as "_flat.compact.old" and can never be misread as flat-store
-# residue (regression-tested).
-_FLAT_TMP = "_compact.flat.tmp"
-_FLAT_OLD = "_compact.flat.old"
-_FLAT_DRAINED = "_DRAINED"
-
-
-def _move_parquet_files(src: str, dst: str) -> None:
-    for f in sorted(os.listdir(src)):
-        if f.endswith(".parquet") and not os.path.exists(os.path.join(dst, f)):
-            os.rename(os.path.join(src, f), os.path.join(dst, f))
-
-
-def _sweep_flat_residue(parent: str, dirs: list[str], actions: list[str]) -> None:
-    """Flat-leaf recovery for residue found in ``parent``. Protocol
-    (see ``_compact_flat_leaf``): rewrite → _flat.compact.tmp; move old
-    files → _flat.compact.old; touch .old/_DRAINED; move new files up;
-    rmtree tmp; rmtree old. Recovery:
-
-    - ``.old`` without ``_DRAINED`` → crash mid-drain: the parent holds
-      only ORIGINAL files — roll BACK (restore files from .old, drop
-      tmp).
-    - ``.old`` with ``_DRAINED`` → drain completed: the parent holds
-      only NEW files (possibly partially moved) — roll FORWARD (move
-      any files still in tmp up, drop tmp, drop the superseded .old).
-    - ``tmp`` alone → incomplete rewrite, originals untouched: drop it.
-    """
-    old = os.path.join(parent, _FLAT_OLD)
-    tmp = os.path.join(parent, _FLAT_TMP)
-    if _FLAT_OLD in dirs:
-        if os.path.exists(os.path.join(old, _FLAT_DRAINED)):
-            if os.path.isdir(tmp):
-                _move_parquet_files(tmp, parent)
-                shutil.rmtree(tmp)
-            shutil.rmtree(old)
-            actions.append(f"rolled forward flat compaction in {parent}")
-        else:
-            _move_parquet_files(old, parent)
-            shutil.rmtree(old)
-            if os.path.isdir(tmp):
-                shutil.rmtree(tmp)
-            actions.append(f"rolled back flat compaction in {parent}")
-        for d in (_FLAT_OLD, _FLAT_TMP):
-            if d in dirs:
-                dirs.remove(d)
-    elif _FLAT_TMP in dirs:
-        shutil.rmtree(tmp)
-        dirs.remove(_FLAT_TMP)
-        actions.append(f"removed partial flat rewrite {tmp}")
-
-
-def _sweep_residue(store_dir: str) -> list[str]:
-    """Recover from a crashed compaction. Residue is invisible to
-    readers and the planner (underscore prefix), so sweeping never
-    races a read. Rules, per nested leaf ``<L>``:
-
-    - ``_<L>.compact.old`` present, ``<L>`` missing → the crash hit
-      between the two swap renames; the backup IS the data — rename it
-      back into place.
-    - ``_<L>.compact.old`` present, ``<L>`` present → the new leaf was
-      fully renamed in; the backup is superseded — delete it.
-    - ``_<L>.compact.tmp`` → always a partial/complete rewrite whose
-      source rows still live at ``<L>`` or its ``.old`` — delete it.
-
-    Flat-leaf residue (``_flat.compact.*`` — store_dir compacted as its
-    own leaf) recovers via ``_sweep_flat_residue``."""
-    actions: list[str] = []
-    for root, dirs, _files in os.walk(store_dir):
-        _sweep_flat_residue(root, dirs, actions)
-        for d in list(dirs):
-            if not d.startswith("_"):
-                continue
-            full = os.path.join(root, d)
-            if d.endswith(".compact.old"):
-                leaf = os.path.join(root, _unstage_name(d, ".compact.old"))
-                if os.path.exists(leaf):
-                    shutil.rmtree(full)
-                    actions.append(f"removed superseded backup {full}")
-                else:
-                    os.rename(full, leaf)
-                    actions.append(f"restored {leaf} from backup")
-                dirs.remove(d)
-            elif d.endswith(".compact.tmp"):
-                shutil.rmtree(full)
-                dirs.remove(d)
-                actions.append(f"removed partial rewrite {full}")
-    return actions
-
-
-def sweep_residue(store_dir: str) -> list[str]:
-    """Public crash-recovery entry point: callers that APPEND to a
-    store between compactions (e.g. the streaming LSH index) must run
-    this BEFORE concluding a store is absent/empty — a crash mid-swap
-    leaves the committed data under staging names that only this sweep
-    restores; appending first would strand (and later delete) the
-    backup."""
-    if not os.path.isdir(store_dir):
-        return []
-    return _sweep_residue(store_dir)
+def _parquet_files(d: str) -> list[str]:
+    return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
 
 
 def compaction_plan(
@@ -190,18 +72,13 @@ def compaction_plan(
     count, byte total, and the file count compaction would produce.
     ``needed`` is False when the directory is already at (or below) its
     target file count — re-running a completed compaction is a no-op.
-    Planning starts by sweeping (and where needed, restoring from)
-    residue of any crashed prior run, so the plan always sees exactly
-    the committed leaves."""
-    _sweep_residue(store_dir)
+    Planning starts with ``dircommit.recover``, so the plan always
+    sees exactly the committed leaves."""
+    dircommit.recover(store_dir)
     plan = []
     for leaf in _leaf_parquet_dirs(store_dir):
-        files = [
-            os.path.join(leaf, f)
-            for f in os.listdir(leaf)
-            if f.endswith(".parquet")
-        ]
-        total = sum(os.path.getsize(f) for f in files)
+        files = _parquet_files(leaf)
+        total = sum(os.path.getsize(os.path.join(leaf, f)) for f in files)
         target_files = max(1, math.ceil(total / target_bytes))
         plan.append(
             {
@@ -224,53 +101,32 @@ def compact_store(
     """Compact every leaf directory that exceeds its target file count;
     returns the executed plan (with ``n_files_after`` filled in).
     Content-preserving by construction: each rewrite is
-    read → coalesce(target) → write of the same rows, swapped in
-    atomically. ``max_concurrency`` > 1 submits leaf rewrites through a
+    read → coalesce(target) → write of the same rows, committed through
+    ``dircommit``. ``max_concurrency`` > 1 submits leaf rewrites through a
     thread pool — Spark's scheduler interleaves the independent jobs
     (FIFO within a pool is fine: each job is small) so thousands of
-    tiny leaves don't serialize on driver round-trips; each leaf's
-    swap stays atomic and leaves never share state."""
+    tiny leaves don't serialize on driver round-trips; each leaf
+    commits with its own intent, and leaves never share state."""
     plan = compaction_plan(store_dir, target_bytes)
-
-    def _compact_flat_leaf(leaf: str, n_out: int) -> None:
-        # The leaf IS the store root: a dir-rename swap would stage in
-        # the store's PARENT, invisible to every sweep (ADVICE r06).
-        # Stage inside the store instead; the _DRAINED marker written
-        # between the drain and the refill makes every crash window
-        # recoverable (_sweep_flat_residue). Not reader-atomic during
-        # the two file-move phases — flat-store compaction is a
-        # single-writer maintenance window (nested leaves keep the
-        # reader-atomic dir swap).
-        tmp = os.path.join(leaf, _FLAT_TMP)
-        old = os.path.join(leaf, _FLAT_OLD)
-        spark.read.parquet(leaf).coalesce(n_out).write.mode("overwrite").parquet(tmp)
-        os.makedirs(old)
-        _move_parquet_files(leaf, old)
-        with open(os.path.join(old, _FLAT_DRAINED), "w"):
-            pass
-        _move_parquet_files(tmp, leaf)
-        shutil.rmtree(tmp)
-        shutil.rmtree(old)
+    staging = os.path.join(store_dir, dircommit.STAGING)
+    shutil.rmtree(staging, ignore_errors=True)
 
     def _compact_leaf(entry: dict) -> None:
-        if not entry["needed"]:
-            entry["n_files_after"] = entry["n_files"]
-            return
-        leaf, n_out = entry["dir"], entry["target_files"]
-        if os.path.abspath(leaf) == os.path.abspath(store_dir):
-            _compact_flat_leaf(leaf, n_out)
-        else:
-            parent, base = os.path.split(leaf)
-            tmp = os.path.join(parent, _stage_name(base, ".compact.tmp"))
-            swap = os.path.join(parent, _stage_name(base, ".compact.old"))
+        leaf = entry["dir"]
+        if entry["needed"]:
+            stage = os.path.join(dircommit.STAGING, uuid.uuid4().hex)
             # coalesce, not repartition: merging files needs no shuffle
-            spark.read.parquet(leaf).coalesce(n_out).write.mode("overwrite").parquet(tmp)
-            os.rename(leaf, swap)
-            os.rename(tmp, leaf)
-            shutil.rmtree(swap)
-        entry["n_files_after"] = sum(
-            1 for f in os.listdir(leaf) if f.endswith(".parquet")
-        )
+            spark.read.parquet(leaf).coalesce(entry["target_files"]).write.parquet(
+                os.path.join(store_dir, stage)
+            )
+            rel = os.path.relpath(leaf, store_dir)
+            if rel == os.curdir:
+                staged = _parquet_files(os.path.join(store_dir, stage))
+                moves = {os.path.join(stage, f): f for f in staged}
+                dircommit.commit(store_dir, moves, deletes=_parquet_files(leaf))
+            else:
+                dircommit.commit(store_dir, {stage: rel})
+        entry["n_files_after"] = len(_parquet_files(leaf))
 
     if max_concurrency <= 1:
         for entry in plan:
@@ -280,4 +136,5 @@ def compact_store(
 
         with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
             list(pool.map(_compact_leaf, plan))
+    shutil.rmtree(staging, ignore_errors=True)
     return plan

@@ -40,7 +40,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from yamr_spark.streaming.upsert import _STAGING, _stage_merge
+from yamr_spark.dircommit import STAGING
+from yamr_spark.streaming.upsert import _stage_merge
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
@@ -107,7 +108,7 @@ def commit_merge(
         v = buckets.get(str(b))
         return None if v is None else bucket_dir(b, v)
 
-    stage = os.path.join(table_dir, _STAGING)
+    stage = os.path.join(table_dir, STAGING)
     staged = _stage_merge(batch_df, stage, committed, key, order, tie, n_buckets)
     for b, src in staged.items():
         new_dir = bucket_dir(b, version)

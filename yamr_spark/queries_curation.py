@@ -520,8 +520,8 @@ def q_chunk_documents(spark, sf_dir):
 def q_compacted_store_counts(spark, sf_dir):
     """Small-file compaction under the hash gate: a deliberately
     fragmented per-lang store (20 files per partition) is compacted to
-    right-sized files (atomic per-directory swap, metadata-only
-    planning), then read back and rolled up — any row lost, duplicated,
+    right-sized files (each leaf committed through ``dircommit``,
+    metadata-only planning), then read back and rolled up — any row lost, duplicated,
     or mis-partitioned by the rewrite fails the content hash against
     the uncompacted oracle."""
     from pyspark.sql import functions as F

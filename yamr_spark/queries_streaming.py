@@ -277,7 +277,7 @@ def q_streaming_passthrough(spark, sf_dir):
 def q_streaming_upsert_latest(spark, sf_dir):
     """MERGE-INTO over an append-only engine: foreachBatch keyed upsert.
     Each micro-batch merges into a hash-bucketed parquet store (read old
-    bucket ∪ batch slice → keep latest per key → atomic directory swap;
+    bucket ∪ batch slice → keep latest per key → one ``dircommit`` commit;
     untouched buckets never touched). The stream is run TWICE against
     the same checkpoint — the second run is a no-op batch — and the
     store must equal the batch keep-latest oracle, proving both merge

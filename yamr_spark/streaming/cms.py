@@ -22,8 +22,9 @@ depth x width cells regardless of batch size; the serve-side sum runs
 over batches x (d*w) rows. For unbounded run lengths,
 ``streaming/sketch_compact.compact_prefix(..., cms_merge, upto)``
 folds any checkpoint-committed prefix of batch partitions into one
-summed partition (same additivity), with the staged-inside-the-store
-crash discipline; serve/ingest paths run its ``recover`` first.
+summed partition (same additivity), committed through
+``yamr_spark.dircommit``; serve/ingest paths run ``dircommit.recover``
+first.
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from yamr_spark import dircommit
 from yamr_spark.operators.text import cms_sketch
 
 
@@ -71,13 +73,10 @@ def stream_cms_to_store(
 ) -> None:
     """Drain the stream (availableNow) into the delta store.
 
-    Crash-residue recovery runs ONCE before the first batch (the LSH
-    ingest discipline): a compactor that died mid-swap leaves a commit
-    marker + staged partition that must be resolved before new batch
-    partitions land."""
-    from yamr_spark.streaming.sketch_compact import recover
-
-    recover(store_dir)
+    ``dircommit.recover`` runs ONCE before the first batch (the LSH
+    ingest discipline): a compaction that died after its commit point
+    must be finished before new batch partitions land."""
+    dircommit.recover(store_dir)
     q = (
         sdf.writeStream.foreachBatch(
             lambda b, bid: merge_cms_batch(
@@ -93,9 +92,7 @@ def stream_cms_to_store(
 
 def read_cms_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """The served sketch: cell-wise sum over every batch partition."""
-    from yamr_spark.streaming.sketch_compact import recover
-
-    recover(store_dir)
+    dircommit.recover(store_dir)
     return (
         spark.read.parquet(store_dir)
         .groupBy("i", "bucket")

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from yamr_spark import dircommit
+
 
 def merge_kmv_batch(
     batch_df: DataFrame,
@@ -68,13 +70,10 @@ def stream_kmv_to_store(
 ) -> None:
     """Drain the stream (availableNow) into the bottom-k delta store.
 
-    Crash-residue recovery runs ONCE before the first batch (the LSH
-    ingest discipline): a compactor that died mid-swap leaves a commit
-    marker + staged partition that must be resolved before new batch
-    partitions land."""
-    from yamr_spark.streaming.sketch_compact import recover
-
-    recover(store_dir)
+    ``dircommit.recover`` runs ONCE before the first batch (the LSH
+    ingest discipline): a compaction that died after its commit point
+    must be finished before new batch partitions land."""
+    dircommit.recover(store_dir)
     q = (
         sdf.writeStream.foreachBatch(
             lambda b, bid: merge_kmv_batch(b, bid, col, store_dir, k=k)
@@ -94,9 +93,7 @@ def read_kmv_store(spark: SparkSession, store_dir: str, k: int = 256) -> DataFra
     bottom-k)."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    from yamr_spark.streaming.sketch_compact import recover
-
-    recover(store_dir)
+    dircommit.recover(store_dir)
     bottom = (
         spark.read.parquet(store_dir)
         .select("h")

@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from yamr_spark import dircommit
 from yamr_spark.operators.dedup import minhash_band_table, minhash_signatures
 
 
@@ -86,18 +87,14 @@ def stream_lsh_into_index(
     wasted bytes — which the periodic compaction keeps bounded and a
     full rebuild would remove."""
 
-    # Crash-residue recovery ONCE, BEFORE the first batch can touch the
-    # index (ADVICE r06): a crash mid-compaction leaves the committed
-    # index under staging names; appending first would recreate an
-    # EMPTY index and the next sweep would then drop the stranded
-    # backup as superseded — permanently losing the pre-crash index.
-    # Once per stream start suffices (not per batch): within a run the
-    # only residue producer is compact_store, whose own planning sweep
-    # recovers before it compacts — so a fresh crash window only exists
-    # across a RESTART, which lands here.
-    from yamr_spark.operators.maintenance import sweep_residue
-
-    sweep_residue(index_dir)
+    # Recovery ONCE, BEFORE the first batch can touch the index: a
+    # compaction that crashed after its commit point may have left the
+    # index with none of its visible files; appending first would
+    # match the batch against an empty index. Once per stream start
+    # suffices: within a run compact_store recovers before it plans, so
+    # a fresh crash window only exists across a RESTART, which lands
+    # here.
+    dircommit.recover(index_dir)
 
     def _ingest(batch_df: DataFrame, _bid: int) -> None:
         sigs = minhash_band_table(minhash_signatures(batch_df))

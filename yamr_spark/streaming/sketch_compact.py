@@ -1,14 +1,21 @@
-"""Crash-safe PREFIX compaction for the per-batch sketch delta stores
-(CMS: ``streaming/cms.py``; KMV: ``streaming/kmv.py``).
+"""Crash-safe PREFIX compaction for the per-batch delta stores (CMS:
+``streaming/cms.py``; KMV: ``streaming/kmv.py``; the substring window
+index: ``streaming/substring.py``).
 
-Both stores accumulate one ``batch_id=`` partition per micro-batch, so
-the serve-side merge grows linearly with run length. Their merges are
-associative (cell addition; set union), so any PREFIX of batch
+Each store accumulates one ``batch_id=`` partition per micro-batch,
+so the serve-side merge grows linearly with run length. Their merges
+are associative (cell addition; set union), so any PREFIX of batch
 partitions may be rewritten as ONE merged partition without changing
-the served result — this module does that rewrite with the staged-
-inside-the-store crash discipline the streaming LSH index established
-(stage under a Spark-hidden ``_``-prefixed dir, commit via marker,
-recover before any read).
+the served result — this module does that rewrite.
+
+Crash safety is ``yamr_spark.dircommit``'s one protocol: the merged
+rows are staged under ``_staging``, and one intent deletes the folded
+partitions other than the target and moves the stage onto
+``batch_id=<target>``, replacing it. The target is replaced, never
+deleted, so replaying the intent after its move completed keeps the
+merged partition. ``compact_prefix`` recovers first; serve and ingest
+paths call ``dircommit.recover`` before reading a store a compactor
+may have touched.
 
 REPLAY CONTRACT: only compact batches the stream's CHECKPOINT has
 committed — i.e. pass an ``upto`` strictly below the newest batch id.
@@ -16,31 +23,17 @@ foreachBatch can replay only the batch whose commit was in flight at a
 crash; committed batches never replay, so folding them into a merged
 partition can never collide with a re-delivered ``batch_id=``
 overwrite. (The merged partition reuses the smallest folded id.)
-
-Crash windows (protocol: write staged → write marker → delete folded
-partitions → move staged into place → remove marker):
-- crash before marker: staged dir is garbage; recovery deletes it
-  (nothing committed, store untouched).
-- crash after marker, folded partitions partially deleted: recovery
-  finishes the deletes (the marker lists them) and completes the move.
-- crash after the move, marker still present: recovery just removes
-  the marker (idempotent — the staged dir is gone).
-``recover(store_dir)`` runs all of this and is called by
-``compact_prefix`` itself; serve paths should call it before reading a
-store that a compactor may have touched (mirrors ``sweep_residue``).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_STAGE = "_compact_stage"
-_MARKER = "_compact_commit.json"
+from yamr_spark import dircommit
 
 
 def _batch_dirs(store_dir: str) -> list[tuple[int, str]]:
@@ -49,46 +42,6 @@ def _batch_dirs(store_dir: str) -> list[tuple[int, str]]:
         if name.startswith("batch_id="):
             out.append((int(name.split("=", 1)[1]), os.path.join(store_dir, name)))
     return sorted(out)
-
-
-def recover(store_dir: str) -> str | None:
-    """Finish (or roll back) a crashed compaction; returns a short note
-    of what was done, or None if the store was clean."""
-    if not os.path.isdir(store_dir):
-        return None
-    marker = os.path.join(store_dir, _MARKER)
-    stage = os.path.join(store_dir, _STAGE)
-    # a crash between writing marker.tmp and its rename leaves the .tmp
-    # behind with no marker — uncommitted residue, same class as the
-    # stage below
-    tmp_marker = marker + ".tmp"
-    if os.path.exists(tmp_marker) and not os.path.exists(marker):
-        os.remove(tmp_marker)
-    if not os.path.exists(marker):
-        if os.path.isdir(stage):
-            # staged but never committed: the store is intact, the
-            # stage is garbage
-            shutil.rmtree(stage)
-            return "dropped uncommitted stage"
-        return None
-    with open(marker) as fh:
-        plan = json.load(fh)
-    if not os.path.isdir(stage):
-        # the stage only disappears via the rename into place, so the
-        # move ALREADY completed: the target partition IS the merged
-        # data and must not be touched (deleting the plan's dirs here
-        # would destroy it — caught by test_crash_after_move_marker_left
-        # against a first draft that deleted unconditionally). Only the
-        # marker removal was lost.
-        os.remove(marker)
-        return "completed interrupted compaction"
-    for d in plan["delete"]:
-        path = os.path.join(store_dir, d)
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-    os.rename(stage, os.path.join(store_dir, plan["target"]))
-    os.remove(marker)
-    return "completed interrupted compaction"
 
 
 def compact_prefix(
@@ -121,10 +74,9 @@ def compact_prefix(
 
     ``partition_by`` rewrites the merged partition under sub-partition
     directories (the substring index's ``hb=`` hash buckets): the
-    staged dir gets one subdir per value — the whole stage still moves
-    into place with the same single rename, so the crash protocol is
-    unchanged."""
-    recover(store_dir)  # guarantees: no marker, no stage, no .tmp left
+    staged dir gets one subdir per value, and the whole stage still
+    moves onto the target in one rename."""
+    dircommit.recover(store_dir)
     dirs = _batch_dirs(store_dir)
     if dirs and upto >= dirs[-1][0] and not stream_stopped:
         raise ValueError(
@@ -136,8 +88,8 @@ def compact_prefix(
     folded = [(b, p) for b, p in dirs if b <= upto]
     if len(folded) < 2:
         return len(folded)
-    target_id = folded[0][0]
-    stage = os.path.join(store_dir, _STAGE)
+    stage = os.path.join(store_dir, dircommit.STAGING)
+    shutil.rmtree(stage, ignore_errors=True)
     # basePath anchors partition discovery at the store root: folded
     # dirs with sub-partition levels (the substring index's hb=
     # buckets) would otherwise conflict as multiple roots. merge_fns
@@ -145,33 +97,20 @@ def compact_prefix(
     merged = merge_fn(
         spark.read.option("basePath", store_dir).parquet(*[p for _, p in folded])
     )
-    # computation barrier INSIDE the protected window is unnecessary:
-    # the write below reads the old partitions and writes the hidden
-    # stage — no path it reads is deleted until the marker commit
+    # no computation barrier: nothing this write reads is deleted
+    # before the commit
     if partition_by:
         # one task per sub-partition value -> one file per subdir
-        (
-            merged.repartition(*partition_by)
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(stage)
+        merged.repartition(*partition_by).write.partitionBy(*partition_by).parquet(
+            stage
         )
     else:
-        merged.coalesce(1).write.mode("overwrite").parquet(stage)
-    marker = os.path.join(store_dir, _MARKER)
-    with open(marker + ".tmp", "w") as fh:
-        json.dump(
-            {
-                "delete": [os.path.basename(p) for _, p in folded],
-                "target": f"batch_id={target_id}",
-            },
-            fh,
-        )
-    os.rename(marker + ".tmp", marker)  # atomic commit point
-    for _, p in folded:
-        shutil.rmtree(p)
-    os.rename(stage, os.path.join(store_dir, f"batch_id={target_id}"))
-    os.remove(marker)
+        merged.coalesce(1).write.parquet(stage)
+    dircommit.commit(
+        store_dir,
+        {dircommit.STAGING: os.path.basename(folded[0][1])},
+        deletes=[os.path.basename(p) for _, p in folded[1:]],
+    )
     return len(folded)
 
 

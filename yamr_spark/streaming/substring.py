@@ -70,9 +70,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from yamr_spark import dircommit
 from yamr_spark.functions import hash60_sql
 from yamr_spark.operators.curation import _TOKS
-from yamr_spark.streaming.sketch_compact import compact_prefix, recover
+from yamr_spark.streaming.sketch_compact import compact_prefix
 
 _WIDTH = 8
 # hash-bucket (hb=) directory count under each batch_id= partition.
@@ -294,7 +295,7 @@ def stream_substring_into_index(
         wins = _window_table(batch_df, width)
         wins.persist()
         try:
-            recover(index_dir)  # finish any interrupted compaction
+            dircommit.recover(index_dir)  # finish any interrupted compaction
             has_index = os.path.isdir(index_dir) and any(
                 f.startswith("batch_id=") for f in os.listdir(index_dir)
             )
@@ -393,7 +394,7 @@ def stream_minimized_into_index(
             "doc_id", F.length("text").cast("long").alias("n_chars")
         )
         try:
-            recover(index_dir)
+            dircommit.recover(index_dir)
             has_index = os.path.isdir(index_dir) and any(
                 f.startswith("batch_id=") for f in os.listdir(index_dir)
             )

@@ -14,15 +14,19 @@ merges and ``operators.snapshots.commit_merge``), the way yamr's
 reducer writes every region's result in one sink pass: read the OLD
 versions of only the buckets the batch touches, union the batch,
 keep-latest, and write every touched bucket in ONE ``partitionBy``
-write to an underscore-named staging dir. Each bucket is then
-committed by directory renames. No write ever overwrites a path its
-own plan reads, so no computation barrier is needed, and the number
-of Spark jobs per merge does not grow with the number of touched
-buckets. Untouched buckets are never read or written, so per-batch
-cost is O(batch ∪ touched buckets), not O(store). On a real cluster
-the same pattern is what Delta/Iceberg MERGE INTO compiles to
-(copy-on-write of matched files); here it is plain parquet plus
-directory renames, so the engine has no table-format dependency.
+write under ``_staging``. No write ever overwrites a path its own plan
+reads, so no computation barrier is needed, and the number of Spark
+jobs per merge does not grow with the number of touched buckets.
+Untouched buckets are never read or written, so per-batch cost is
+O(batch ∪ touched buckets), not O(store).
+
+Crash safety is ``yamr_spark.dircommit``'s one protocol: a merge
+commits its staged buckets onto ``bucket=<b>`` with one intent, and
+both the merge and ``read_store`` call ``dircommit.recover`` first, so
+a crash at any step reads as the store before the merge or after it.
+On a real cluster the same pattern is what Delta/Iceberg MERGE INTO
+compiles to (copy-on-write of matched files); here it is plain parquet
+plus directory renames, so the engine has no table-format dependency.
 """
 
 from __future__ import annotations
@@ -33,6 +37,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from yamr_spark import dircommit
 
 
 def keep_latest(
@@ -68,13 +74,6 @@ def _bucket_of(key_col, n_buckets: int):
     return F.pmod(F.xxhash64(key_col), F.lit(n_buckets))
 
 
-# Staging dir of the one partitioned write, inside the store (or the
-# snapshot table root). The leading underscore hides it from Spark's
-# FileIndex and from ``read_store``; a crash leaves it behind, and the
-# next merge sweeps it before staging again.
-_STAGING = "_staging"
-
-
 def _stage_merge(
     batch_df: DataFrame,
     stage_dir: str,
@@ -88,11 +87,9 @@ def _stage_merge(
     return ``{bucket: staged dir}``. ``committed(b)`` names bucket
     ``b``'s current directory, or None when the bucket has no data yet.
     The touched old buckets ∪ the batch go through one keep-latest and
-    ONE ``partitionBy`` write into ``stage_dir``; each staged bucket
-    gets its own ``_SUCCESS`` marker once that write has committed.
-    The old buckets are read with the batch's schema, so no schema
-    inference job runs.
-    The caller commits the staged dirs by renaming them into place."""
+    ONE ``partitionBy`` write into ``stage_dir`` (cleared first). The
+    old buckets are read with the batch's schema, so no schema
+    inference job runs. The caller commits the staged dirs."""
     spark = batch_df.sparkSession
     shutil.rmtree(stage_dir, ignore_errors=True)
     batch = batch_df.withColumn("__bucket", _bucket_of(F.col(key), n_buckets))
@@ -112,35 +109,7 @@ def _stage_merge(
         )
     finally:
         batch.unpersist()
-    staged = {}
-    for b in touched:
-        staged[b] = os.path.join(stage_dir, f"__bucket={b}")
-        open(os.path.join(staged[b], "_SUCCESS"), "w").close()
-    return staged
-
-
-def _sweep_bucket_residue(store_dir: str) -> None:
-    """Store-wide crash-residue sweep, run before every merge AND every
-    read: a bucket stranded as ``_bucket_<b>.old`` by a crash between
-    the two swap renames (committed ``bucket=<b>`` missing) is RESTORED;
-    superseded ``.old`` and partial ``.tmp`` dirs are dropped.
-    Sweeping all buckets — not just the ones the current batch touches —
-    closes the ADVICE r05 hole where a direct read after a crash
-    silently under-reported the untouched stranded bucket."""
-    import re
-
-    if not os.path.isdir(store_dir):
-        return
-    for d in sorted(os.listdir(store_dir)):
-        m = re.fullmatch(r"_bucket_(\d+)\.(old|tmp)", d)
-        if not m:
-            continue
-        full = os.path.join(store_dir, d)
-        bucket_dir = os.path.join(store_dir, f"bucket={m.group(1)}")
-        if m.group(2) == "old" and not os.path.exists(bucket_dir):
-            os.rename(full, bucket_dir)
-        else:
-            shutil.rmtree(full)
+    return {b: os.path.join(stage_dir, f"__bucket={b}") for b in touched}
 
 
 def merge_batch_into_store(
@@ -151,39 +120,23 @@ def merge_batch_into_store(
     tie: str,
     n_buckets: int = 8,
 ) -> None:
-    """Batch-merge ``batch_df`` into the keyed store: stage every bucket
-    the batch touches in one write (``_stage_merge``), then swap each
-    staged bucket in. Each swap renames the staged bucket to
-    ``_bucket_<b>.tmp``, the live bucket aside to ``_bucket_<b>.old``,
-    and the tmp into place — so a concurrent reader sees the bucket
-    missing for two metadata ops, not for an rmtree of the old data.
-    Every staging name starts with an underscore and holds no '='
-    (Spark's path filter exempts underscore names containing '=', for
-    partition dirs), so Spark's FileIndex AND ``read_store`` both
-    ignore it: a crash at any point leaves only invisible residue
-    (swept by the next merge), never a half-committed bucket that
-    reads as duplicated keys."""
+    """Batch-merge ``batch_df`` into the keyed store: recover any
+    crashed commit, stage every bucket the batch touches in one write
+    under ``_staging`` (``_stage_merge``), then replace every touched
+    ``bucket=<b>`` with its staged dir in one ``dircommit.commit``."""
+    dircommit.recover(store_dir)
 
     def committed(b: int) -> str | None:
         d = os.path.join(store_dir, f"bucket={b}")
-        return d if os.path.exists(os.path.join(d, "_SUCCESS")) else None
+        return d if os.path.isdir(d) else None
 
-    # recover residue of any previously crashed merge STORE-WIDE before
-    # touching anything (a stranded bucket may not be in this batch's
-    # touched set)
-    _sweep_bucket_residue(store_dir)
-    stage = os.path.join(store_dir, _STAGING)
+    stage = os.path.join(store_dir, dircommit.STAGING)
     staged = _stage_merge(batch_df, stage, committed, key, order, tie, n_buckets)
-    for b, src in staged.items():
-        bucket_dir = os.path.join(store_dir, f"bucket={b}")
-        tmp = os.path.join(store_dir, f"_bucket_{b}.tmp")
-        old_stage = os.path.join(store_dir, f"_bucket_{b}.old")
-        os.rename(src, tmp)
-        if os.path.exists(bucket_dir):
-            os.rename(bucket_dir, old_stage)
-        os.rename(tmp, bucket_dir)
-        if os.path.exists(old_stage):
-            shutil.rmtree(old_stage)
+    if staged:
+        dircommit.commit(
+            store_dir,
+            {os.path.relpath(d, store_dir): f"bucket={b}" for b, d in staged.items()},
+        )
     shutil.rmtree(stage, ignore_errors=True)
 
 
@@ -233,21 +186,17 @@ def read_store(
     tombstone instead of resurrecting the key) and filtered HERE —
     pass ``tombstone_col`` to hide deleted keys from readers.
 
-    Only exact ``bucket=<int>`` dirs with a _SUCCESS marker qualify —
-    staging residue (``_staging``, ``_bucket_K.tmp``, ``_bucket_K.old``)
-    is invisible by its underscore prefix, and the strict name match
-    additionally excludes any legacy suffixed dir. The store-wide
-    residue sweep runs first, so a bucket stranded mid-swap by a crash
-    is restored (not silently missing) even when no merge has touched
-    it since."""
+    Recovers any crashed commit first, so the store reads as its last
+    committed state even when no merge has run since the crash. Only
+    exact ``bucket=<int>`` dirs are read; a ``bucket=<b>`` dir appears
+    only through a commit, and commit residue is underscore-named."""
     import re
 
-    _sweep_bucket_residue(store_dir)
+    dircommit.recover(store_dir)
     buckets = [
         os.path.join(store_dir, d)
         for d in sorted(os.listdir(store_dir))
         if re.fullmatch(r"bucket=\d+", d)
-        and os.path.exists(os.path.join(store_dir, d, "_SUCCESS"))
     ]
     out = spark.read.parquet(*buckets)
     if tombstone_col is not None:
